@@ -28,16 +28,29 @@ import org.apache.spark.sql.functions._
   * agrees bit-for-bit with what a monolithic
   * [[Dedup.minhashLshPairs]] over the union would find across the
   * index/delta boundary.
+  *
+  * Growth is the [[graft.api.Lsm]] lifecycle over the two keyed sides
+  * (bands, sv). Forgotten documents stop WITNESSING duplicates from
+  * the next [[flagAndAdmit]] on (pairs anti-joined on dup_of —
+  * O(pairs), never an index rescan) and leave physically at
+  * [[compact]]. The hot-bucket sidecar is rebuilt by the FULL
+  * compaction only.
   */
 object DedupIndex {
 
+  private val Bands = graft.api.Lsm.Side("bands", "_bands", Seq("band_key"),
+    "doc_id LONG, band_idx INT, band_key LONG")
+  private val Sv = graft.api.Lsm.Side("sv", "_sv", Seq("doc_id"),
+    "doc_id LONG, sv ARRAY<LONG>")
+  private val Grow = graft.api.Lsm.Grow("doc_id", Seq(Bands, Sv))
+
   /** Candidate-join side: (doc_id, band_idx, band_key), bucketed on
     * band_key. */
-  def bandsTable(table: String): String = table + "_bands"
+  def bandsTable(table: String): String = Bands.base(table)
 
   /** Shingle-array side: (doc_id, sv), bucketed on doc_id — one row
     * per doc, arrays never duplicated per band. */
-  def svTable(table: String): String = table + "_sv"
+  def svTable(table: String): String = Sv.base(table)
 
   /** Hot-bucket sidecar: (band_idx, band_key, n_docs) for every index
     * band bucket holding more than [[Dedup.DefaultBandBucketCap]]
@@ -62,32 +75,25 @@ object DedupIndex {
     * tables (the signed frame is cached for the two writes, then
     * released). */
   def write(docs: DataFrame, table: String, buckets: Int = 16): Unit = {
-    // an in-memory catalog forgets managed tables across sessions but
-    // their warehouse directories survive — clear both, or a fresh
-    // session's saveAsTable dies with LOCATION_ALREADY_EXISTS
-    Seq(bandsTable(table), svTable(table), hotTable(table))
-      .foreach(n => resetManaged(docs.sparkSession, n))
+    drop(docs.sparkSession, table)
     val signed = Dedup.signedBands(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the three writes are independent readers of the one cached
-      // signing pass — primed once, then overlapped (guide §2.6, r18):
-      // the per-write fixed cost (scheduling + AQE + commit) leaves
-      // the critical path, and at cluster scale each write's commit +
+      // signing pass — primed once, then overlapped (guide §2.6): the
+      // per-write fixed cost (scheduling + AQE + commit) leaves the
+      // critical path, and at cluster scale each write's commit +
       // straggler tail hides behind its siblings' compute
       graft.api.Overlap.prime(signed)
-      graft.api.Overlap.run(
-        () => graft.api.Bucketing.writeBucketed(
-          signed.select(col("doc_id"),
-            posexplode(col("bands")).as(Seq("band_idx", "band_key"))),
-          bandsTable(table), Seq("band_key"), buckets),
-        () => graft.api.Bucketing.writeBucketed(
-          signed.select(col("doc_id"), col("sv")),
-          svTable(table), Seq("doc_id"), buckets),
-        () => writeHot(signed.select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band_idx", "band_key"))), table))
+      graft.api.Lsm.writeBase(Grow, table,
+        Seq(bandRows(signed), signed.select(col("doc_id"), col("sv"))), buckets,
+        () => writeHot(bandRows(signed), table))
     } finally signed.unpersist(blocking = true)
   }
+
+  /** (doc_id, band_idx, band_key) rows of a signed frame. */
+  private def bandRows(signed: DataFrame): DataFrame =
+    signed.select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
 
   /** The hot-sidecar aggregation (bands -> over-cap buckets).
     * Factored out of [[writeHot]] so PlanAuditSpec can pin that, fed
@@ -105,15 +111,14 @@ object DedupIndex {
   private def writeHot(bands: DataFrame, table: String): Unit =
     hotAgg(bands).write.mode("overwrite").saveAsTable(hotTable(table))
 
-  /** Drop all parts of a persisted index. */
+  /** Drop all parts of a persisted index. An in-memory catalog
+    * forgets managed tables across sessions but their warehouse
+    * directories survive — [[graft.api.Bucketing.resetManaged]] clears
+    * both, or a fresh session's saveAsTable dies with
+    * LOCATION_ALREADY_EXISTS. */
   def drop(spark: SparkSession, table: String): Unit =
     Seq(bandsTable(table), svTable(table), hotTable(table)).foreach(n =>
-      resetManaged(spark, n))
-
-  /** Shared stale-directory-safe reset (see
-    * [[graft.api.Bucketing.resetManaged]] — ADVICE r7 #1). */
-  private def resetManaged(spark: SparkSession, name: String): Unit =
-    graft.api.Bucketing.resetManaged(spark, name)
+      graft.api.Bucketing.resetManaged(spark, n))
 
   /** Flag documents of `newDocs` that are near-duplicates (verified
     * shingle Jaccard >= threshold) of any INDEXED document: returns
@@ -155,8 +160,7 @@ object DedupIndex {
       idxSv: DataFrame, threshold: Double,
       pairFilter: org.apache.spark.sql.Column = lit(true),
       hot: Option[DataFrame] = None): DataFrame = {
-    val deltaBands0 = signed
-      .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
+    val deltaBands0 = bandRows(signed)
     // hot-bucket guard (see hotTable): delta band rows pointing into
     // an over-cap index bucket are dropped BEFORE the candidate join.
     // No hard broadcast hint: the hot sidecar is tiny (empty on a
@@ -184,39 +188,26 @@ object DedupIndex {
         (col("na") + col("nb") - col("common")) >= threshold)
   }
 
-  // ---------------------------------------------------------------
-  // Growing index: LSM-style extents (VERDICT r7 #4)
-  //
-  // A stream that admits survivors must APPEND to the index, but a
-  // per-batch append into the bucketed base tables writes `buckets`
-  // new files every micro-batch — O(batches x buckets) small files,
-  // the classic 100-TB file-count death. Instead admitted docs land
-  // in batch_id-partitioned plain-parquet EXTENTS beside the base
-  // (`<growPath>/bands/batch_id=N`, `<growPath>/sv/batch_id=N`),
-  // each batch overwriting its OWN partition (idempotent on replay,
-  // same discipline as the flag sink), and [[compact]] periodically
-  // folds extents into the bucketed base — the LSM shape. A day's
-  // crawl is ~0.1% of a 100-TB corpus, so the unbucketed union side
-  // of the candidate join stays negligible between compactions.
-  // ---------------------------------------------------------------
+  // Growing index (VERDICT r7 #4): a stream that admits survivors
+  // must APPEND to the index, but a per-batch append into the bucketed
+  // base tables writes `buckets` new files every micro-batch —
+  // O(batches x buckets) small files, the classic 100-TB file-count
+  // death. Admitted docs land in batch_id-partitioned extents instead
+  // and compaction folds them (graft.api.Lsm). A day's crawl is ~0.1%
+  // of a 100-TB corpus, so the extent side of the candidate join stays
+  // negligible between compactions.
 
   /** Extent directories for a growing index. */
-  def extentBandsPath(growPath: String): String = growPath + "/bands"
-  def extentSvPath(growPath: String): String = growPath + "/sv"
-  def tombstonePath(growPath: String): String = growPath + "/tombstones"
+  def extentBandsPath(growPath: String): String = Bands.path(growPath)
+  def extentSvPath(growPath: String): String = Sv.path(growPath)
+  def tombstonePath(growPath: String): String = graft.api.Lsm.tombstonePath(growPath)
 
   /** Forget documents (right-to-be-forgotten over the growing index):
-    * the ids land as an idempotent tombstone batch partition — no
-    * rewrite of the bucketed base or the extents. From the next
-    * [[flagAndAdmit]] on, a forgotten document no longer witnesses
-    * duplicates (its pairs are anti-joined off the flag output);
-    * [[compact]] removes its bands/sv rows physically and clears the
-    * tombstones. Caller contract: ids must reference INDEXED
-    * documents — tombstoning an id that later arrives as a NEW batch
-    * document would silently drop that batch's within-batch pairs
-    * too. Since r11 the contract is self-enforcing: [[flagAndAdmit]]
-    * rejects a batch whose ids intersect the tombstone set (one
-    * O(batch) semi-join count, paid only when tombstones exist).
+    * from the next [[flagAndAdmit]] on, a forgotten document no longer
+    * witnesses duplicates; [[compact]] removes its bands/sv rows.
+    * Caller contract: ids must reference INDEXED documents — a
+    * tombstoned id arriving later as a NEW batch document would lose
+    * that batch's within-batch pairs, so [[flagAndAdmit]] rejects it.
     *
     * Replay scope (ADVICE r10 #3): tombstones apply RETROACTIVELY on
     * replay — a flag batch re-run after a later forget() rewrites its
@@ -227,60 +218,18 @@ object DedupIndex {
     * to a FIXED tombstone state; extents (guarded by batch_id) are
     * bit-identical on replay regardless. */
   def forget(spark: SparkSession, growPath: String, ids: DataFrame,
-      batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13) — see
-    // the admit-side comment
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    ids.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite")
-      .parquet(s"${tombstonePath(growPath)}/batch_id=$batchId")
-  }
+      batchId: Long): Unit =
+    graft.api.Lsm.forget(spark, Grow, growPath, ids, batchId)
 
-  private def tombstonesFor(spark: SparkSession,
-      growPath: String): Option[DataFrame] =
-    if (dirExists(spark, tombstonePath(growPath)))
-      Some(spark.read.schema("doc_id LONG, batch_id LONG")
-        .parquet(tombstonePath(growPath)).select(col("doc_id")))
-    else None
-
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  // explicit schemas for extent reads: a batch whose docs are ALL
-  // duplicates admits nothing, leaving a data-file-less partition
-  // that would break schema inference on the parent directory
-  private val extBandsSchema = "doc_id LONG, band_idx INT, band_key LONG, batch_id LONG"
-  private val extSvSchema = "doc_id LONG, sv ARRAY<LONG>, batch_id LONG"
-
-  /** The index frames a batch must flag against, as SEPARATE parts:
-    * the bucketed base, plus (if any) the extents admitted by a PRIOR
-    * batch. Parts stay separate so each candidate join keeps its own
-    * best physical shape — unioning base and extents into one frame
-    * (the pre-r9 form) erased the base tables' bucketing and made
-    * every batch re-shuffle the WHOLE index: measured per-batch
-    * admission cost was O(base) (12-20 s at a 200k-doc base vs
-    * 83-145 s at 2M, same 20k delta — docs/SCALE.md "growing
-    * index"). Flagging per part and unioning the verified PAIRS is
-    * pair-set-identical (base and extent doc ids are disjoint).
-    * The `batch_id < beforeBatch` partition-pruned filter is the
-    * replay guard — a batch re-run after a mid-write crash must not
-    * see its own partial extent (its docs would flag as duplicates of
-    * themselves). */
+  /** The (bands, sv) index frames a batch must flag against: the
+    * bucketed base plus the extents of batches before `beforeBatch`,
+    * as SEPARATE parts ([[graft.api.Lsm.parts]]) — flagging per part
+    * and unioning the verified PAIRS is pair-set-identical (base and
+    * extent doc ids are disjoint). */
   private[graft] def indexPartsFor(spark: SparkSession, table: String,
-      growPath: String, beforeBatch: Long): Seq[(DataFrame, DataFrame)] = {
-    val base = (spark.table(bandsTable(table)), spark.table(svTable(table)))
-    if (!dirExists(spark, extentBandsPath(growPath))) Seq(base)
-    else {
-      val guard = col("batch_id") < lit(beforeBatch)
-      Seq(base,
-        (spark.read.schema(extBandsSchema).parquet(extentBandsPath(growPath))
-            .filter(guard).drop("batch_id"),
-          spark.read.schema(extSvSchema).parquet(extentSvPath(growPath))
-            .filter(guard).drop("batch_id")))
-    }
-  }
+      growPath: String, beforeBatch: Long): Seq[(DataFrame, DataFrame)] =
+    graft.api.Lsm.parts(spark, Bands, table, growPath, Some(beforeBatch))
+      .zip(graft.api.Lsm.parts(spark, Sv, table, growPath, Some(beforeBatch)))
 
   /** One micro-batch of the GROWING incremental dedup: flag `batch`
     * against base index + prior extents, write verified dup rows
@@ -302,20 +251,20 @@ object DedupIndex {
   def flagAndAdmit(spark: SparkSession, table: String, growPath: String,
       batch: DataFrame, batchId: Long, sinkPath: String,
       threshold: Double = 0.5): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13): a
-    // mutation landing between a crash and its recovery must not be
-    // built on half-swapped state, and — with the plan's recorded
-    // partition sets — can never be deleted by a later replay
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
     // normalize the id type so extents always union cleanly with the
     // base tables (and the explicit extent read schemas)
     val signed = Dedup.signedBands(
         batch.withColumn("doc_id", col("doc_id").cast("long")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // tombstone-rebirth guard (see graft.api.Lsm.admitting): the
+      // pair-side anti-join below can't tell a forgotten witness from
+      // a reborn doc, whose within-batch pairs would silently vanish.
+      // This batch's own prior sink partition also proves a replay.
+      val tombs = graft.api.Lsm.admitting(spark, Grow, growPath,
+        signed.select(col("doc_id")), batchId, Seq(s"$sinkPath/batch_id=$batchId"))
       val parts = indexPartsFor(spark, table, growPath, batchId)
-      val deltaBands = signed
-        .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
+      val deltaBands = bandRows(signed)
       val deltaSv = signed.select(col("doc_id"), col("sv"))
       // the hot guard applies to the BASE part only (parts.head):
       // extents are admission-rate-bounded between compactions
@@ -327,52 +276,10 @@ object DedupIndex {
         .reduce(_ unionByName _)
         .unionByName(flagSigned(signed, deltaBands, deltaSv, threshold,
           pairFilter = col("dup_of") < col("doc_id")))
-      // forget-tombstones (see [[forget]]): a deleted document must no
-      // longer witness duplicates. Applied on the PAIR frame (O(pairs))
-      // — an index-side anti-join would rescan O(index) bands per
-      // batch, the exact delta-sized-admission trap of docs/SCALE.md.
-      val tombs = tombstonesFor(spark, growPath)
-      // caller-contract guard (VERDICT r10 #3): a tombstoned id
-      // re-arriving as a NEW batch doc would silently lose its
-      // within-batch pairs (the pair-side anti-join can't tell a
-      // forgotten witness from a reborn doc). EXEMPT: ids found in
-      // THIS batch's own prior sink/extent partitions — that is a
-      // crash-REPLAY of the batch that first carried the doc (a
-      // forget() between original run and replay is legal: the doc
-      // was indexed), and the replay must proceed, rewriting its sink
-      // without the forgotten pairs per the retroactive-replay
-      // contract above. Membership anywhere ELSE in the index is NOT
-      // exemption — a reborn id colliding with a not-yet-compacted
-      // forgotten doc is still a rejection, which is exactly the
-      // window where its within-batch pairs would silently vanish.
-      // O(batch)-sized joins, paid only when tombstones exist.
-      // Residual: a crash between the sink and sv-extent writes,
-      // followed by forget() of one of the batch's own ADMITTED ids,
-      // rejects the replay (the id left no record) — recover by
-      // clearing the batch's partial partitions.
-      tombs.foreach { ts =>
-        val inBatch = signed.select(col("doc_id"))
-          .join(ts, Seq("doc_id"), "left_semi")
-        val none = signed.select(col("doc_id")).limit(0)
-        def partIds(dir: String, schema: String, idCol: String) =
-          if (dirExists(spark, dir))
-            spark.read.schema(schema).parquet(dir)
-              .select(col(idCol).as("doc_id"))
-          else none
-        val ownPrior = partIds(s"$sinkPath/batch_id=$batchId",
-            "doc_id LONG, dup_of LONG, common LONG, na LONG, nb LONG",
-            "doc_id")
-          .unionByName(partIds(
-            s"${extentSvPath(growPath)}/batch_id=$batchId",
-            "doc_id LONG, sv ARRAY<LONG>", "doc_id"))
-        val reborn = inBatch.join(ownPrior, Seq("doc_id"), "left_anti").count()
-        require(reborn == 0L,
-          s"flagAndAdmit batch $batchId contains $reborn doc_id(s) that are " +
-            "tombstoned in this index and not part of this batch's own " +
-            "prior output (forget() ids must reference INDEXED documents; " +
-            "reusing an id for a new document is not supported)")
-      }
-      // eager localCheckpoint instead of persist+prime (r18): the same
+      // forgotten documents must not witness: applied on the PAIR frame
+      // (O(pairs)) — an index-side anti-join would rescan O(index)
+      // bands per batch, the delta-sized-admission trap of docs/SCALE.md.
+      // Eager localCheckpoint instead of persist+prime (r18): the same
       // one materialization job (computing it also fills signed's
       // cache, so every reader below starts warm), but the checkpoint
       // additionally TRUNCATES the lineage — the flag tree here is the
@@ -392,16 +299,15 @@ object DedupIndex {
         // (guide §2.6, r18). Crash windows are unchanged in kind: all
         // three writes are idempotent per-partition overwrites and
         // every replay guard keys on per-partition existence (the
-        // tombstone exemption above already unions sink AND sv-extent
-        // ids), so any committed subset replays exactly as under
-        // sequential order.
+        // rebirth exemption unions the sink and both extent
+        // partitions), so any committed subset replays exactly as
+        // under sequential order.
         val survivors = signed.join(
           dropped.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
         graft.api.Overlap.run(
           () => dropped.write.mode("overwrite")
             .parquet(s"$sinkPath/batch_id=$batchId"),
-          () => survivors
-            .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
+          () => bandRows(survivors)
             .write.mode("overwrite")
             .parquet(s"${extentBandsPath(growPath)}/batch_id=$batchId"),
           () => survivors.select(col("doc_id"), col("sv"))
@@ -411,121 +317,30 @@ object DedupIndex {
     } finally signed.unpersist(blocking = true)
   }
 
-  /** Fold every extent into the bucketed base tables and delete the
-    * extent directories — the LSM compaction. Union is staged to
-    * plain parquet first (the base tables cannot be overwritten while
-    * being read), then rewritten through the bucketed writer so the
-    * compacted index is again one zero-exchange join side. Callers
-    * must run this while no growing stream is active on `growPath`. */
+  /** Fold every extent into the bucketed base tables and apply the
+    * tombstones physically ([[graft.api.Lsm.compact]]) — the
+    * forgotten docs' bands and shingle arrays leave the index here.
+    * The hot sidecar covers the whole compacted index again (the
+    * admitted extents' buckets re-enter the guard): it rebuilds from
+    * the STAGED bands, row-identical to the bucketed rewrite, so all
+    * three writes are independent. */
   def compact(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16): Unit = {
-    val hasExtents = dirExists(spark, extentBandsPath(growPath))
-    val tombs = tombstonesFor(spark, growPath)
-    if (!hasExtents && tombs.isEmpty) return
-    val staging = growPath + "/_compact_staging"
-    def withExtents(base: DataFrame, extDir: String, schema: String) =
-      if (hasExtents)
-        base.unionByName(
-          spark.read.schema(schema).parquet(extDir).drop("batch_id"))
-      else base
-    // forget-tombstones applied physically: the forgotten docs' bands
-    // and shingle arrays leave the index here (flagAndAdmit only
-    // masked their pairs until now)
-    def live(df: DataFrame) =
-      tombs.fold(df)(ts => df.join(ts, Seq("doc_id"), "left_anti"))
-    // the two staged folds are independent (bands vs sv side) —
-    // overlapped (guide §2.6, r18), as are the three rebuild writes
-    // below
-    graft.api.Overlap.run(
-      () => live(withExtents(spark.table(bandsTable(table)),
-          extentBandsPath(growPath), extBandsSchema))
-        .write.mode("overwrite").parquet(staging + "/bands"),
-      () => live(withExtents(spark.table(svTable(table)),
-          extentSvPath(growPath), extSvSchema))
-        .write.mode("overwrite").parquet(staging + "/sv"))
-    resetManaged(spark, bandsTable(table))
-    resetManaged(spark, svTable(table))
-    resetManaged(spark, hotTable(table))
-    // the hot sidecar covers the whole compacted index again — the
-    // admitted extents' buckets re-enter the guard here. It rebuilds
-    // from the STAGED bands (row-identical to the bucketed rewrite of
-    // the same staging data), so all three writes are independent.
-    graft.api.Overlap.run(
-      () => graft.api.Bucketing.writeBucketed(
-        spark.read.parquet(staging + "/bands"),
-        bandsTable(table), Seq("band_key"), buckets),
-      () => graft.api.Bucketing.writeBucketed(
-        spark.read.parquet(staging + "/sv"),
-        svTable(table), Seq("doc_id"), buckets),
-      () => writeHot(spark.read.parquet(staging + "/bands"), table))
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(extentBandsPath(growPath), extentSvPath(growPath),
-        tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-  }
+      buckets: Int = 16): Unit =
+    graft.api.Lsm.compact(spark, Grow, table, growPath,
+      staged => graft.api.Lsm.writeBase(Grow, table, staged, buckets,
+        () => writeHot(staged.head, table)),
+      alsoReset = Seq(hotTable(table)))
 
-  /** Size-tiered compaction (the [[graft.text.PostingsIndex
-    * .compactTiered]] discipline — VERDICT r11 #4 extended to all LSM
-    * families): below `maxExtentFraction` of the base's doc mass (sv
-    * rows), the bands/sv extents fold into ONE consolidated extent
-    * partition each (batch_id = [[graft.api.Lsm.ConsolidatedBatchId]])
-    * with extent-hitting tombstones applied physically; base-hitting
-    * tombstones survive — [[flagAndAdmit]] keeps masking their pairs
-    * exactly as before — and the bucketed base AND the hot sidecar
-    * are untouched (the hot guard's scope deliberately stays
-    * pre-compaction: extents remain extents, so the guard contract
-    * is unchanged — only the FULL [[compact]] re-enters extent
-    * buckets into the guard). O(extent) write amplification; above
-    * the threshold delegates to [[compact]]. Same caller contract
-    * (not concurrent with admissions/forgets; pre-consolidation
-    * batches lose their replay partitions). */
+  /** Size-tiered compaction ([[graft.api.Lsm.compactTiered]]) measured
+    * in documents (sv rows). Base-hitting tombstones survive —
+    * [[flagAndAdmit]] keeps masking their pairs — and the bucketed
+    * base AND the hot sidecar are untouched: extents remain extents,
+    * so the guard's scope is unchanged; only the FULL [[compact]]
+    * re-enters extent buckets into the guard. */
   def compactTiered(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit = {
-    // AUTO-RECOVER first (r13): re-running compactTiered is the
-    // natural operator response to a crash, but staging over a
-    // HALF-SWAPPED index would consolidate inconsistent state — an
-    // interrupted generation must finish before a new one stages
-    // (no-op when there is nothing to recover)
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    val hasExt = dirExists(spark, extentBandsPath(growPath))
-    if (!hasExt) return compact(spark, table, growPath, buckets)
-    val extSv = spark.read.schema(extSvSchema)
-      .parquet(extentSvPath(growPath)).drop("batch_id")
-    // two independent metadata-count jobs — overlapped (guide §2.6, r18)
-    val counts = graft.api.Overlap.all(Seq(
-      () => spark.table(svTable(table)).count(),
-      () => extSv.count()))
-    val (baseN, extN) = (counts(0), counts(1))
-    if (baseN <= 0 || extN.toDouble / baseN >= maxExtentFraction)
-      return compact(spark, table, growPath, buckets)
-    val staging = graft.api.Lsm.stagingRoot(growPath)
-    val ts = tombstonesFor(spark, growPath)
-    val extBands = spark.read.schema(extBandsSchema)
-      .parquet(extentBandsPath(growPath)).drop("batch_id")
-    def live(df: DataFrame) =
-      ts.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    // the three staged writes are independent (bands / sv / surviving
-    // tombstones) — overlapped; the survivor count rides the tombstone
-    // write as an observed metric instead of a read-back count job
-    // (the PostingsIndex r17 stats-on-write pattern; same local-mode/
-    // no-speculation note as PostingsIndex.writeStatsRow)
-    val remainingCnt = new java.util.concurrent.atomic.AtomicLong(0L)
-    graft.api.Overlap.run(Seq(
-      () => live(extBands).write.mode("overwrite").parquet(staging + "/bands"),
-      () => live(extSv).write.mode("overwrite").parquet(staging + "/sv")) ++
-      ts.toSeq.map { t => () =>
-        val obs = org.apache.spark.sql.Observation()
-        t.distinct()
-          .join(extSv.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .observe(obs, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(staging + "/tombstones")
-        remainingCnt.set(obs.get("n").asInstanceOf[Long])
-      }: _*)
-    graft.api.Lsm.swapConsolidated(spark, staging,
-      Seq(staging + "/bands" -> extentBandsPath(growPath),
-        staging + "/sv" -> extentSvPath(growPath)),
-      if (remainingCnt.get > 0) Some(staging + "/tombstones") else None,
-      tombstonePath(growPath))
-  }
+      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit =
+    graft.api.Lsm.compactTiered(spark, Grow, table, growPath, maxExtentFraction,
+      full = () => compact(spark, table, growPath, buckets),
+      sizes = (() => spark.table(svTable(table)).count(),
+        () => graft.api.Lsm.extent(spark, Sv, table, growPath).fold(0L)(_.count())))
 }

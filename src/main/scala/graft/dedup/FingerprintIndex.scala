@@ -20,12 +20,17 @@ import org.apache.spark.sql.functions._
   * delta's candidate join clusters on the stored layout (zero
   * index-side exchange — the DedupIndex plan contract); the delta is
   * the only thing fingerprinted per run; extents grow LSM-style per
-  * batch (idempotent partitions) and [[compact]] folds them. Band
+  * batch (the [[graft.api.Lsm]] lifecycle over one keyed side) and
+  * [[compact]] folds them. Band
   * arithmetic is [[Dedup.bandedHammingPairs]]'s, shared via the same
   * shift/mask construction, so index-vs-delta agrees bit-for-bit
   * with the monolithic pair join within the radius.
   */
 object FingerprintIndex {
+
+  private val FBands = graft.api.Lsm.Side("fbands", "_fbands", Seq("band_key"),
+    "id LONG, fp LONG, band_idx INT, band_key LONG")
+  private val Grow = graft.api.Lsm.Grow("id", Seq(FBands))
 
   /** The one stored table: (id, fp, band_idx, band_key) bucketed on
     * band_key.
@@ -45,13 +50,13 @@ object FingerprintIndex {
     * one representative id per distinct fp (a `distinct-on-fp` write;
     * changes witness attribution from all-copies to one-copy, the
     * usual trade). */
-  def bandsTable(table: String): String = table + "_fbands"
+  def bandsTable(table: String): String = FBands.base(table)
 
   /** Extent directory of a growing fingerprint index. */
-  def extentPath(growPath: String): String = growPath + "/fbands"
+  def extentPath(growPath: String): String = FBands.path(growPath)
 
   /** Tombstone directory (forgotten ids) of a growing index. */
-  def tombstonePath(growPath: String): String = growPath + "/tombstones"
+  def tombstonePath(growPath: String): String = graft.api.Lsm.tombstonePath(growPath)
 
   /** Right-to-be-forgotten for media (the image-RTBF twin of
     * [[DedupIndex.forget]]): ids land as an idempotent tombstone
@@ -64,21 +69,8 @@ object FingerprintIndex {
     * retroactively on sink replay (privacy erasure must not resurrect
     * forgotten pairs). */
   def forget(spark: SparkSession, growPath: String, ids: DataFrame,
-      batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13) — see
-    // the flagAndAdmit-side comment
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    ids.select(col("id").cast("long").as("id"))
-      .write.mode("overwrite")
-      .parquet(s"${tombstonePath(growPath)}/batch_id=$batchId")
-  }
-
-  private def tombstonesFor(spark: SparkSession,
-      growPath: String): Option[DataFrame] =
-    if (dirExists(spark, tombstonePath(growPath)))
-      Some(spark.read.schema("id LONG, batch_id LONG")
-        .parquet(tombstonePath(growPath)).select(col("id")))
-    else None
+      batchId: Long): Unit =
+    graft.api.Lsm.forget(spark, Grow, growPath, ids, batchId)
 
   private def bandRows(fps: DataFrame, idCol: String, fpCol: String,
       bits: Int, maxHamming: Int): DataFrame = {
@@ -94,10 +86,9 @@ object FingerprintIndex {
   /** Persist the banded index over `fps` (idCol, fpCol). */
   def write(fps: DataFrame, idCol: String, fpCol: String, table: String,
       bits: Int, maxHamming: Int, buckets: Int = 16): Unit = {
-    graft.api.Bucketing.resetManaged(fps.sparkSession, bandsTable(table))
-    graft.api.Bucketing.writeBucketed(
-      bandRows(fps, idCol, fpCol, bits, maxHamming),
-      bandsTable(table), Seq("band_key"), buckets)
+    drop(fps.sparkSession, table)
+    graft.api.Lsm.writeBase(Grow, table,
+      Seq(bandRows(fps, idCol, fpCol, bits, maxHamming)), buckets)
   }
 
   def drop(spark: SparkSession, table: String): Unit =
@@ -125,13 +116,6 @@ object FingerprintIndex {
       .filter(col("hamming") <= maxHamming)
       .distinct()
 
-  private val extSchema = "id LONG, fp LONG, band_idx INT, band_key LONG, batch_id LONG"
-
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** One micro-batch of the GROWING fingerprint dedup: flag `batch`
     * against base + prior extents + smaller-id batch members, write
     * flagged rows (id, dup_of, hamming) to the batch's sink
@@ -143,48 +127,17 @@ object FingerprintIndex {
   def flagAndAdmit(spark: SparkSession, table: String, growPath: String,
       batchFps: DataFrame, idCol: String, fpCol: String, bits: Int,
       maxHamming: Int, batchId: Long, sinkPath: String): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13): a
-    // mutation landing between a crash and its recovery must not be
-    // built on half-swapped state, and — with the plan's recorded
-    // partition sets — can never be deleted by a later replay
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
     val delta = bandRows(batchFps, idCol, fpCol, bits, maxHamming)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // forget contract guard (as DedupIndex): a tombstoned id
-      // re-arriving as a NEW item would silently lose its
-      // within-batch pairs — reject it, EXEMPTING only ids found in
-      // THIS batch's own prior sink/extent partitions (= a
-      // crash-replay of the batch that first carried the item; a
-      // forget() in between is legal and the replay rewrites its sink
-      // without the forgotten pairs). See DedupIndex.flagAndAdmit for
-      // the full semantics and the rare mid-write-crash residual.
-      val tombs = tombstonesFor(spark, growPath)
-      tombs.foreach { ts =>
-        val inBatch = delta.select(col("id")).distinct()
-          .join(ts, Seq("id"), "left_semi")
-        val none = delta.select(col("id")).limit(0)
-        def partIds(dir: String, schema: String) =
-          if (dirExists(spark, dir))
-            spark.read.schema(schema).parquet(dir).select(col("id"))
-          else none
-        val ownPrior = partIds(s"$sinkPath/batch_id=$batchId",
-            "id LONG, dup_of LONG, hamming LONG")
-          .unionByName(partIds(s"${extentPath(growPath)}/batch_id=$batchId",
-            "id LONG, fp LONG, band_idx INT, band_key LONG"))
-        val reborn = inBatch.join(ownPrior, Seq("id"), "left_anti").count()
-        require(reborn == 0L,
-          s"flagAndAdmit batch $batchId contains $reborn id(s) tombstoned " +
-            "in this index and not part of this batch's own prior output " +
-            "(forget() ids must reference INDEXED items)")
-      }
-      val parts: Seq[DataFrame] =
-        spark.table(bandsTable(table)) +:
-          (if (dirExists(spark, extentPath(growPath)))
-            Seq(spark.read.schema(extSchema).parquet(extentPath(growPath))
-              .filter(col("batch_id") < lit(batchId)).drop("batch_id"))
-          else Nil)
-      val flagged0 = parts.map(p => flagRows(delta, p, maxHamming))
+      // tombstone-rebirth guard (see graft.api.Lsm.admitting and
+      // DedupIndex.flagAndAdmit), with this batch's own prior sink
+      // partition also proving a replay
+      val tombs = graft.api.Lsm.admitting(spark, Grow, growPath,
+        delta.select(col("id")).distinct(), batchId,
+        Seq(s"$sinkPath/batch_id=$batchId"))
+      val flagged0 = graft.api.Lsm.parts(spark, FBands, table, growPath, Some(batchId))
+        .map(p => flagRows(delta, p, maxHamming))
         .reduce(_ unionByName _)
         .unionByName(flagRows(delta, delta, maxHamming,
           pairFilter = col("dup_of") < col("id")))
@@ -216,81 +169,22 @@ object FingerprintIndex {
     } finally delta.unpersist(blocking = true)
   }
 
-  /** Fold extents into the bucketed base, apply tombstones physically
-    * (forgotten ids' band rows leave the index here), clear both
-    * directories. */
+  /** Fold extents into the bucketed base and apply tombstones
+    * physically ([[graft.api.Lsm.compact]]) — forgotten ids' band rows
+    * leave the index here. */
   def compact(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16): Unit = {
-    val hasExt = dirExists(spark, extentPath(growPath))
-    val tombs = tombstonesFor(spark, growPath)
-    if (!hasExt && tombs.isEmpty) return
-    val staging = growPath + "/_compact_staging"
-    val unioned =
-      if (hasExt) spark.table(bandsTable(table))
-        .unionByName(spark.read.schema(extSchema)
-          .parquet(extentPath(growPath)).drop("batch_id"))
-      else spark.table(bandsTable(table))
-    tombs.fold(unioned)(ts => unioned.join(ts, Seq("id"), "left_anti"))
-      .write.mode("overwrite").parquet(staging)
-    graft.api.Bucketing.resetManaged(spark, bandsTable(table))
-    graft.api.Bucketing.writeBucketed(spark.read.parquet(staging),
-      bandsTable(table), Seq("band_key"), buckets)
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(extentPath(growPath), tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-  }
+      buckets: Int = 16): Unit =
+    graft.api.Lsm.compact(spark, Grow, table, growPath,
+      graft.api.Lsm.writeBase(Grow, table, _, buckets))
 
-  /** Size-tiered compaction (the [[graft.text.PostingsIndex
-    * .compactTiered]] discipline — VERDICT r11 #4 extended to all LSM
-    * families): below `maxExtentFraction` of the base's band-row
-    * mass, the extents fold into ONE consolidated extent partition
-    * (batch_id = [[graft.api.Lsm.ConsolidatedBatchId]]) with
-    * extent-hitting tombstones applied physically; base-hitting
-    * tombstones survive (still masked at flag time) and the bucketed
-    * base is untouched — O(extent) write amplification. Above the
-    * threshold delegates to [[compact]]. Same caller contract. */
+  /** Size-tiered compaction ([[graft.api.Lsm.compactTiered]]) measured
+    * in band rows; base-hitting tombstones survive, still masked at
+    * flag time, and the bucketed base is untouched below the
+    * threshold. */
   def compactTiered(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit = {
-    // AUTO-RECOVER first (r13): re-running compactTiered is the
-    // natural operator response to a crash, but staging over a
-    // HALF-SWAPPED index would consolidate inconsistent state — an
-    // interrupted generation must finish before a new one stages
-    // (no-op when there is nothing to recover)
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    val hasExt = dirExists(spark, extentPath(growPath))
-    if (!hasExt) return compact(spark, table, growPath, buckets)
-    val ext = spark.read.schema(extSchema)
-      .parquet(extentPath(growPath)).drop("batch_id")
-    // two independent metadata-count jobs — overlapped (guide §2.6)
-    val counts = graft.api.Overlap.all(Seq(
-      () => spark.table(bandsTable(table)).count(),
-      () => ext.count()))
-    val (baseN, extN) = (counts(0), counts(1))
-    if (baseN <= 0 || extN.toDouble / baseN >= maxExtentFraction)
-      return compact(spark, table, growPath, buckets)
-    val staging = graft.api.Lsm.stagingRoot(growPath)
-    val ts = tombstonesFor(spark, growPath)
-    // staged consolidated extent and surviving-tombstone writes are
-    // independent — overlapped; the survivor count rides the write as
-    // an observed metric instead of a read-back count job (the
-    // PostingsIndex.writeStatsRow pattern and deployment note)
-    val remainingCnt = new java.util.concurrent.atomic.AtomicLong(0L)
-    graft.api.Overlap.run(Seq(
-      () => ts.fold(ext)(t => ext.join(t, Seq("id"), "left_anti"))
-        .write.mode("overwrite").parquet(staging + "/fbands")) ++
-      ts.toSeq.map { t => () =>
-        val obs = org.apache.spark.sql.Observation()
-        t.distinct()
-          .join(ext.select(col("id")), Seq("id"), "left_anti")
-          .observe(obs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"))
-          .write.mode("overwrite").parquet(staging + "/tombstones")
-        remainingCnt.set(obs.get("n").asInstanceOf[Long])
-      }: _*)
-    graft.api.Lsm.swapConsolidated(spark, staging,
-      Seq(staging + "/fbands" -> extentPath(growPath)),
-      if (remainingCnt.get > 0) Some(staging + "/tombstones") else None,
-      tombstonePath(growPath))
-  }
+      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit =
+    graft.api.Lsm.compactTiered(spark, Grow, table, growPath, maxExtentFraction,
+      full = () => compact(spark, table, growPath, buckets),
+      sizes = (() => spark.table(bandsTable(table)).count(),
+        () => graft.api.Lsm.extent(spark, FBands, table, growPath).fold(0L)(_.count())))
 }

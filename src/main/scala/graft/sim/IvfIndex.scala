@@ -19,8 +19,23 @@ import graft.graph.Algorithms
   * NearestCell expressions at load. Parquet round-trips doubles
   * bit-exactly, so a loaded index answers queries identically to the
   * just-trained one (asserted in IvfIndexSpec).
+  *
+  * Growth is the [[graft.api.Lsm]] lifecycle. The coarse quantizer is
+  * FROZEN between retrains (the standard IVF serving contract — cell
+  * geometry drifts only as fast as the data distribution), so
+  * admission is one narrow assignment pass over the batch and
+  * compaction a straight rewrite; [[retrain]] is the stage that
+  * re-learns the geometry. The float index has one keyed side
+  * (`cells`); the int8 index two (`codes`, the scan side, and `vecs`,
+  * the float re-rank side), sharing one tombstone directory.
   */
 object IvfIndex {
+
+  private val Cells = graft.api.Lsm.Side("cells", "", Seq("cell"))
+  private val FloatGrow = graft.api.Lsm.Grow("vec_id", Seq(Cells))
+  private val Codes = graft.api.Lsm.Side("codes", "", Seq("cell"))
+  private val Vecs = graft.api.Lsm.Side("vecs", "_vecs", Seq("vec_id"))
+  private val Int8Grow = graft.api.Lsm.Grow("vec_id", Seq(Codes, Vecs))
 
   /** Train on `corpus` (vec_id, embedding, metadata...) and persist
     * under `table` (+ `table_centroids`): corpus bucketed by cell.
@@ -36,23 +51,24 @@ object IvfIndex {
       .foreach(n => graft.api.Bucketing.resetManaged(spark, n))
     val pts = corpus.select(col("vec_id").as("id"), col("embedding").as("features"))
     val cells = Algorithms.kMeansCentroids(pts, nlist, iterations)
-    import spark.implicits._
     // centroid sidecar and bucketed corpus are independent consumers
-    // of the trained (driver-local) centroids — overlapped (guide
-    // §2.6, r18)
-    graft.api.Overlap.run(
-      () => cells.zipWithIndex
-        .map { case (cent, cid) => (cid, cent.toSeq) }.toSeq
-        .toDF("cid", "cent")
-        .coalesce(1)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_centroids"),
-      () => graft.api.Bucketing.writeBucketed(
-        corpus.select(col("*"),
-          NearestCell.nearestCell(col("embedding"), cells).as("cell")),
-        table, Seq("cell"), buckets))
+    // of the trained (driver-local) centroids — overlapped (guide §2.6)
+    graft.api.Lsm.writeBase(FloatGrow, table, Seq(corpus.select(col("*"),
+        NearestCell.nearestCell(col("embedding"), cells).as("cell"))), buckets,
+      () => writeCentroids(spark, cells, table))
   }
 
+  /** The `<table>_centroids` sidecar: (cid, cent), row index = cell id. */
+  private def writeCentroids(spark: SparkSession, cells: Array[Array[Double]],
+      table: String): Unit = {
+    import spark.implicits._
+    cells.zipWithIndex
+      .map { case (cent, cid) => (cid, cent.toSeq) }.toSeq
+      .toDF("cid", "cent")
+      .coalesce(1)
+      .write.mode("overwrite").format("parquet")
+      .saveAsTable(s"${table}_centroids")
+  }
 
   /** Bounded-by-contract query frames collect ONCE and feed the
     * broadcast side as a local relation (r17, the
@@ -110,61 +126,21 @@ object IvfIndex {
       .select(col("qid"), col("cid"), col("sim"), col("rk"))
   }
 
-  // ---- growing index: LSM-style extents (r9) --------------------------
-  //
-  // The ANN twin of [[graft.dedup.DedupIndex]]'s growth shape: a
-  // corpus that grows with the crawl must admit new vectors without
-  // re-clustering or re-shuffling the stored corpus. The coarse
-  // quantizer is FROZEN between retrains (the standard IVF serving
-  // contract — cell geometry drifts only as fast as the data
-  // distribution), so admission is one narrow assignment pass over
-  // the batch, landed in the batch's own extent partition (replay
-  // overwrites itself: idempotent). Search probes base + extents as
-  // SEPARATE parts (never unioned before the join — that would erase
-  // the base bucketing, the exact O(index) trap measured on the dedup
-  // index, docs/SCALE.md) and merges candidates in the one per-query
-  // ranking window it already pays. [[compact]] folds extents into
-  // the bucketed base.
-
   /** Extent directory of a growing index. */
-  def extentPath(growPath: String): String = growPath + "/cells"
+  def extentPath(growPath: String): String = Cells.path(growPath)
 
   /** Tombstone directory of a growing index (deleted vec_ids). */
-  def tombstonePath(growPath: String): String = growPath + "/tombstones"
+  def tombstonePath(growPath: String): String = graft.api.Lsm.tombstonePath(growPath)
 
   /** Delete vectors from a growing index WITHOUT rewriting anything:
-    * the ids land as the batch's own tombstone partition (idempotent
-    * replay, the extent contract) and [[searchGrown]] anti-joins them
-    * off the candidate set; [[compact]] applies them physically and
-    * clears the directory. Between compactions the tombstone set is
-    * delete-rate bounded — the same LSM argument as the extents
-    * (never corpus-sized), so the anti-join side stays small and AQE
-    * broadcasts it from runtime stats; no hard hint. */
+    * [[searchGrown]] anti-joins them off the candidate set, [[compact]]
+    * applies them physically. Works on both the float and the int8
+    * index (one tombstone directory). Between compactions the
+    * tombstone set is delete-rate bounded, so AQE broadcasts the
+    * anti-join side from runtime stats; no hard hint. */
   def delete(spark: SparkSession, growPath: String, ids: DataFrame,
-      batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13) — see
-    // the admit-side comment
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    ids.select(col("vec_id").cast("long").as("vec_id"))
-      .write.mode("overwrite")
-      .parquet(s"${tombstonePath(growPath)}/batch_id=$batchId")
-  }
-
-  private def tombstones(spark: SparkSession, growPath: String): Option[DataFrame] =
-    if (dirExists(spark, tombstonePath(growPath)))
-      Some(spark.read.schema("vec_id LONG, batch_id LONG")
-        .parquet(tombstonePath(growPath)).select(col("vec_id")))
-    else None
-
-  /** Extent read schema = the base table's columns + the batch_id
-    * partition column: explicit (not inferred) so an empty extent
-    * partition can't break inference, and derived from the base so
-    * metadata columns survive the round-trip. */
-  private def extSchema(spark: SparkSession, table: String) =
-    org.apache.spark.sql.types.StructType(
-      spark.table(table).schema.fields :+
-        org.apache.spark.sql.types.StructField("batch_id",
-          org.apache.spark.sql.types.LongType))
+      batchId: Long): Unit =
+    graft.api.Lsm.forget(spark, FloatGrow, growPath, ids, batchId)
 
   /** Admit one batch of new vectors: assign each to its nearest
     * TRAINED cell and append as the batch's own extent partition.
@@ -172,22 +148,13 @@ object IvfIndex {
     * metadata...); the cell column is computed here. */
   def admit(spark: SparkSession, table: String, growPath: String,
       batch: DataFrame, batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13): a
-    // mutation landing between a crash and its recovery must not be
-    // built on half-swapped state, and — with the plan's recorded
-    // partition sets — can never be deleted by a later replay
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
+    graft.api.Lsm.admitting(spark, FloatGrow, growPath, batch, batchId)
     val cells = loadCentroids(spark, table)
     batch.select(col("*"),
         NearestCell.nearestCell(col("embedding"), cells).as("cell"))
       .withColumn("vec_id", col("vec_id").cast("long"))
       .write.mode("overwrite")
       .parquet(s"${extentPath(growPath)}/batch_id=$batchId")
-  }
-
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** MERGE independently-built IVF shards into one served index
@@ -217,23 +184,9 @@ object IvfIndex {
     require(shards.nonEmpty, "merge needs at least one shard")
     require(!shards.exists(_._1 == outTable),
       "merge target must not be one of the shards")
-    // Finish any interrupted tiered swap before consuming a shard's
-    // grow state — same hardening as admit/forget/compactTiered
-    // (ADVICE r13; see PostingsIndex.merge).
-    shards.foreach { case (_, grow) =>
-      grow.foreach(g => graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(g)))
-    }
     val cells = loadCentroids(spark, shards.head._1)
-    def live(tbl: String, grow: Option[String]): DataFrame = {
-      val ts = grow.flatMap(g => tombstones(spark, g))
-      val parts = Seq(spark.table(tbl)) ++ grow.toSeq.collect {
-        case g if dirExists(spark, extentPath(g)) =>
-          spark.read.schema(extSchema(spark, tbl))
-            .parquet(extentPath(g)).drop("batch_id")
-      }
-      val all = parts.reduce(_ unionByName _)
-      ts.fold(all)(t => all.join(t, Seq("vec_id"), "left_anti"))
-    }
+    def live(tbl: String, grow: Option[String]): DataFrame =
+      grow.fold(spark.table(tbl))(graft.api.Lsm.live(spark, FloatGrow, tbl, _).head)
     val primary = live(shards.head._1, shards.head._2)
     val reassigned = shards.tail.map { case (tbl, grow) =>
       live(tbl, grow).drop("cell")
@@ -242,14 +195,12 @@ object IvfIndex {
     Seq(outTable, s"${outTable}_centroids")
       .foreach(n => graft.api.Bucketing.resetManaged(spark, n))
     // centroid copy and merged bucketed write are independent —
-    // overlapped (guide §2.6, r18)
-    graft.api.Overlap.run(
+    // overlapped (guide §2.6)
+    graft.api.Lsm.writeBase(FloatGrow, outTable,
+      Seq((Seq(primary) ++ reassigned).reduce(_ unionByName _)), buckets,
       () => spark.table(s"${shards.head._1}_centroids")
         .coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${outTable}_centroids"),
-      () => graft.api.Bucketing.writeBucketed(
-        (Seq(primary) ++ reassigned).reduce(_ unionByName _),
-        outTable, Seq("cell"), buckets))
+        .saveAsTable(s"${outTable}_centroids"))
   }
 
   /** Top-k cosine search against base + every admitted extent. Same
@@ -275,13 +226,7 @@ object IvfIndex {
       localQueries(queries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
         .withColumn("cell", explode(NearestCell.nearestCells(col("qv"), cells, nprobe))))
-    val parts: Seq[DataFrame] =
-      spark.table(table) +:
-        (if (dirExists(spark, extentPath(growPath)))
-          Seq(spark.read.schema(extSchema(spark, table))
-            .parquet(extentPath(growPath)))
-        else Nil)
-    val cand = parts
+    val cand = graft.api.Lsm.parts(spark, Cells, table, growPath)
       .map { p =>
         val cb = pred.map(p.filter).getOrElse(p)
           .select(col("vec_id").as("cid"), col("embedding").as("cv"),
@@ -293,127 +238,60 @@ object IvfIndex {
     // tombstoned vectors drop out of the candidate set BEFORE the rank
     // window, so ranks are over live vectors only (a deleted vector
     // must not eat a top-k slot)
-    val live = tombstones(spark, growPath).fold(cand)(ts =>
-      cand.join(ts.select(col("vec_id").as("cid")), Seq("cid"), "left_anti"))
+    val live = maskCandidates(spark, growPath, cand)
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
     live.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("qid"), col("cid"), col("sim"), col("rk"))
   }
 
-  /** Fold every extent into the bucketed base table, APPLY tombstones
-    * physically, and delete both directories — cell assignments are
-    * already final (frozen quantizer), so compaction is a straight
-    * rewrite, no retrain. Callers must not run it while admissions or
-    * deletes are active. */
-  def compact(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16): Unit = {
-    val hasExtents = dirExists(spark, extentPath(growPath))
-    val hasTombs = dirExists(spark, tombstonePath(growPath))
-    if (!hasExtents && !hasTombs) return
-    val staging = growPath + "/_compact_staging"
-    val unioned =
-      if (hasExtents)
-        spark.table(table)
-          .unionByName(spark.read.schema(extSchema(spark, table))
-            .parquet(extentPath(growPath)).drop("batch_id"))
-      else spark.table(table)
-    tombstones(spark, growPath).fold(unioned)(ts =>
-        unioned.join(ts, Seq("vec_id"), "left_anti"))
-      .write.mode("overwrite").parquet(staging)
-    graft.api.Bucketing.resetManaged(spark, table)
-    graft.api.Bucketing.writeBucketed(spark.read.parquet(staging),
-      table, Seq("cell"), buckets)
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(extentPath(growPath), tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-  }
+  /** Tombstoned vectors drop out of the candidate set BEFORE the rank
+    * window, so ranks are over live vectors only (a deleted vector
+    * must not eat a top-k or rerank slot). */
+  private def maskCandidates(spark: SparkSession, growPath: String,
+      cand: DataFrame): DataFrame =
+    graft.api.Lsm.tombstones(spark, FloatGrow, growPath).fold(cand)(ts =>
+      cand.join(ts.select(col("vec_id").as("cid")), Seq("cid"), "left_anti"))
 
-  /** Size-tiered compaction (the [[graft.text.PostingsIndex
-    * .compactTiered]] discipline applied to the vector index —
-    * VERDICT r11 #4 extended to all LSM families): below
-    * `maxExtentFraction` of the base's row mass, the extents fold
-    * into ONE consolidated extent partition (batch_id =
-    * [[graft.text.PostingsIndex.ConsolidatedBatchId]]) with
-    * extent-hitting tombstones applied physically; base-hitting
-    * tombstones survive (still masked by [[searchGrown]]'s
-    * anti-join) and the bucketed base + centroids are untouched —
-    * O(extent) instead of O(index) write amplification. Above the
-    * threshold, delegates to the full [[compact]]. Cell assignments
-    * are final (frozen quantizer), so consolidation is a straight
-    * rewrite. Same caller contract as compact. Spec-pinned in
-    * IvfIndexSpec: base files byte-identical below threshold, search
-    * ≡ pre-compaction ≡ live brute force.
-    *
-    * Threshold sizing: the base-side `count()` is a parquet
+  /** Fold every extent into the bucketed base table and apply
+    * tombstones physically ([[graft.api.Lsm.compact]]); the centroids
+    * stay — cell assignments are final under the frozen quantizer. */
+  def compact(spark: SparkSession, table: String, growPath: String,
+      buckets: Int = 16): Unit =
+    graft.api.Lsm.compact(spark, FloatGrow, table, growPath,
+      graft.api.Lsm.writeBase(FloatGrow, table, _, buckets))
+
+  /** Size-tiered compaction ([[graft.api.Lsm.compactTiered]]) measured
+    * in vector rows: the base-side `count()` is a parquet
     * metadata/footer pass (vectorized count, no row data) — cheap but
     * O(file count); an index that compacts at high frequency should
     * maintain a 1-row stats sidecar instead (the PostingsIndex stats
-    * table is the template; documented trade, review r12 #9). */
+    * table is the template). The bucketed base and the centroids are
+    * untouched below the threshold. Spec-pinned in IvfIndexSpec: base
+    * files byte-identical below threshold, search ≡ pre-compaction ≡
+    * live brute force. */
   def compactTiered(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit = {
-    // AUTO-RECOVER first (r13): re-running compactTiered is the
-    // natural operator response to a crash, but staging over a
-    // HALF-SWAPPED index would consolidate inconsistent state — an
-    // interrupted generation must finish before a new one stages
-    // (no-op when there is nothing to recover)
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    val hasExt = dirExists(spark, extentPath(growPath))
-    if (!hasExt) return compact(spark, table, growPath, buckets)
-    val ext = spark.read.schema(extSchema(spark, table))
-      .parquet(extentPath(growPath)).drop("batch_id")
-    // two independent metadata-count jobs — overlapped (guide §2.6)
-    val counts = graft.api.Overlap.all(Seq(
-      () => spark.table(table).count(),
-      () => ext.count()))
-    val (baseN, extN) = (counts(0), counts(1))
-    if (baseN <= 0 || extN.toDouble / baseN >= maxExtentFraction)
-      return compact(spark, table, growPath, buckets)
-    val staging = graft.api.Lsm.stagingRoot(growPath)
-    val ts = tombstones(spark, growPath)
-    // staged consolidated extent and surviving-tombstone writes are
-    // independent — overlapped; the survivor count rides the write as
-    // an observed metric instead of a read-back count job (the
-    // PostingsIndex.writeStatsRow pattern and deployment note)
-    val remainingCnt = new java.util.concurrent.atomic.AtomicLong(0L)
-    graft.api.Overlap.run(Seq(
-      () => ts.fold(ext)(t => ext.join(t, Seq("vec_id"), "left_anti"))
-        .write.mode("overwrite").parquet(staging + "/cells")) ++
-      ts.toSeq.map { t => () =>
-        val obs = org.apache.spark.sql.Observation()
-        t.distinct()
-          .join(ext.select(col("vec_id")), Seq("vec_id"), "left_anti")
-          .observe(obs, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(staging + "/tombstones")
-        remainingCnt.set(obs.get("n").asInstanceOf[Long])
-      }: _*)
-    graft.api.Lsm.swapConsolidated(spark, staging,
-      Seq(staging + "/cells" -> extentPath(growPath)),
-      if (remainingCnt.get > 0) Some(staging + "/tombstones") else None,
-      tombstonePath(growPath))
-  }
+      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit =
+    graft.api.Lsm.compactTiered(spark, FloatGrow, table, growPath, maxExtentFraction,
+      full = () => compact(spark, table, growPath, buckets),
+      sizes = (() => spark.table(table).count(),
+        () => graft.api.Lsm.extent(spark, Cells, table, growPath).fold(0L)(_.count())))
 
   /** Retrain the coarse quantizer on the LIVE corpus (base + extents
     * − tombstones) and rebuild the index around the NEW cell geometry
     * — the lifecycle stage [[compact]] cannot provide (VERDICT r10
-    * #3 closes the write → admit → delete → filtered-search → compact
-    * → RETRAIN loop): compact folds extents but keeps the frozen
-    * cells, and a corpus whose distribution drifts far enough from
-    * the training snapshot degrades probe recall (queries probe the
-    * nprobe nearest CELLS; cells that no longer tile the data well
-    * make the true neighbors land outside them). Retrain is by
-    * definition a fresh [[write]] of the live corpus — new centroids,
-    * full reassignment, rewritten bucketed base — which is exactly
-    * the oracle contract (search-after-retrain ≡ search against a
-    * fresh write; pinned in IvfIndexSpec and q_knn_retrain). Extents
-    * and tombstones are consumed and cleared; the staging step exists
-    * because the base table cannot be overwritten while being read.
+    * #3): compact keeps the frozen cells, and a corpus whose
+    * distribution drifts far enough from the training snapshot
+    * degrades probe recall (queries probe the nprobe nearest CELLS;
+    * cells that no longer tile the data well make the true neighbors
+    * land outside them). Retrain is by definition a fresh [[write]] of
+    * the live corpus — the oracle contract (search-after-retrain ≡
+    * search against a fresh write; pinned in IvfIndexSpec and
+    * q_knn_retrain). Grow state is consumed and cleared.
     *
     * 100 TB posture: one full-corpus pass (assignment) + k-means on a
     * dim-bounded centroid state — the same O(corpus) cost class as
     * compact, run at the same cadence (rare, scheduled, stream
-    * paused). Admission stays O(delta) between retrains; this is the
-    * planned periodic rebuild, not a per-batch cost. */
+    * paused). Admission stays O(delta) between retrains. */
   def retrain(spark: SparkSession, table: String, growPath: String,
       nlist: Int = 0, iterations: Int = 3, buckets: Int = 16): Unit = {
     // nlist <= 0 (the default) derives the cell count from the STORED
@@ -422,21 +300,9 @@ object IvfIndex {
     // cell COUNT is preserved; the cells themselves retrain — that is
     // the point). Pass nlist explicitly to re-size on purpose.
     val k = if (nlist > 0) nlist else loadCentroids(spark, table).length
-    val staging = growPath + "/_retrain_staging"
-    val unioned =
-      if (dirExists(spark, extentPath(growPath)))
-        spark.table(table)
-          .unionByName(spark.read.schema(extSchema(spark, table))
-            .parquet(extentPath(growPath)).drop("batch_id"))
-      else spark.table(table)
-    val live = tombstones(spark, growPath).fold(unioned)(ts =>
-      unioned.join(ts, Seq("vec_id"), "left_anti"))
-    live.drop("cell").write.mode("overwrite").parquet(staging)
-    write(spark.read.parquet(staging), table, k, iterations, buckets)
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(extentPath(growPath), tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    graft.api.Lsm.rebuildLive(spark, FloatGrow, table, growPath, "_retrain_staging")(
+        live => Seq(live.head.drop("cell")))(
+      staged => write(staged.head, table, k, iterations, buckets))
   }
 
   // ---- int8-quantized variant (VERDICT r7 #3) -------------------------
@@ -445,7 +311,7 @@ object IvfIndex {
     * bucketed on vec_id — floats stored ONCE, fetched by id only for
     * re-rank survivors (the [[graft.dedup.DedupIndex]] `_sv`
     * normalization applied to ANN). */
-  def vecsTable(table: String): String = table + "_vecs"
+  def vecsTable(table: String): String = Vecs.base(table)
 
   /** Train + persist the int8-quantized IVF index: the scan table
     * `<table>` carries (vec_id, cell, codes array<tinyint>, scale_q,
@@ -462,7 +328,6 @@ object IvfIndex {
       .foreach(n => graft.api.Bucketing.resetManaged(spark, n))
     val pts = corpus.select(col("vec_id").as("id"), col("embedding").as("features"))
     val cells = Algorithms.kMeansCentroids(pts, nlist, iterations)
-    import spark.implicits._
     val coded = graft.sim.Quantize.withInt8Codes(corpus)
       .withColumn("normq",
         graft.functions.Int8Dot.int8Dot(col("codes"), col("codes")))
@@ -471,23 +336,14 @@ object IvfIndex {
     // filtered search must prune on metadata at the codes scan
     val meta = corpus.columns.toSeq
       .filterNot(Set("vec_id", "embedding")).map(col)
-    // the three writes (centroid sidecar, codes table, float side
-    // table) are independent — overlapped (guide §2.6, r18)
-    graft.api.Overlap.run(
-      () => cells.zipWithIndex
-        .map { case (cent, cid) => (cid, cent.toSeq) }.toSeq
-        .toDF("cid", "cent")
-        .coalesce(1)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_centroids"),
-      () => graft.api.Bucketing.writeBucketed(
+    // the three writes (codes table, float side table, centroid
+    // sidecar) are independent — overlapped (guide §2.6)
+    graft.api.Lsm.writeBase(Int8Grow, table, Seq(
         coded.select(Seq(col("vec_id"),
           NearestCell.nearestCell(col("embedding"), cells).as("cell"),
           col("codes"), col("scale_q"), col("normq")) ++ meta: _*),
-        table, Seq("cell"), buckets),
-      () => graft.api.Bucketing.writeBucketed(
-        corpus.select(col("vec_id"), col("embedding")),
-        vecsTable(table), Seq("vec_id"), buckets))
+        corpus.select(col("vec_id"), col("embedding"))), buckets,
+      () => writeCentroids(spark, cells, table))
   }
 
   /** Top-k cosine search against a persisted int8 index, two-stage:
@@ -550,34 +406,23 @@ object IvfIndex {
 
   // ---- growing int8 index (r11: lifecycle parity with the float path)
   //
-  // The quantized serving index must grow with the crawl too: the
-  // same LSM extent shape as the float path, except each admission
-  // writes TWO extent families — the codes rows (the scan side) and
-  // the float rows (the re-rank side) — mirroring the base index's
-  // two-table normalization. Quantization is per-vector (scale from
-  // the vector itself), so admitting against the FROZEN quantizer is
-  // bit-identical to having had the vector at write time — which is
-  // exactly the oracle/spec contract.
+  // Quantization is per-vector (scale from the vector itself), so
+  // admitting against the FROZEN quantizer is bit-identical to having
+  // had the vector at write time — exactly the oracle/spec contract.
 
   /** Codes-extent directory of a growing int8 index. */
-  def int8CodesPath(growPath: String): String = growPath + "/codes"
+  def int8CodesPath(growPath: String): String = Codes.path(growPath)
 
   /** Float-vector extent directory of a growing int8 index. */
-  def int8VecsPath(growPath: String): String = growPath + "/vecs"
+  def int8VecsPath(growPath: String): String = Vecs.path(growPath)
 
   /** Admit one batch of new vectors to a persisted int8 index:
     * quantize, assign to the frozen quantizer's nearest cell, land
-    * codes + floats as the batch's own extent partitions (idempotent
-    * replay). Metadata columns ride into the codes extent like the
-    * base write. [[delete]] works unchanged on a growing int8 index
-    * (the tombstone dir is shared across both index kinds). */
+    * codes + floats as the batch's own extent partitions. Metadata
+    * columns ride into the codes extent like the base write. */
   def admitInt8(spark: SparkSession, table: String, growPath: String,
       batch: DataFrame, batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13): a
-    // mutation landing between a crash and its recovery must not be
-    // built on half-swapped state, and — with the plan's recorded
-    // partition sets — can never be deleted by a later replay
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
+    graft.api.Lsm.admitting(spark, Int8Grow, growPath, batch, batchId)
     val cells = loadCentroids(spark, table)
     val coded = graft.sim.Quantize.withInt8Codes(batch)
       .withColumn("normq",
@@ -585,8 +430,7 @@ object IvfIndex {
     val meta = batch.columns.toSeq
       .filterNot(Set("vec_id", "embedding")).map(col)
     // codes extent and float extent are independent — overlapped
-    // (guide §2.6, r18); both are idempotent per-partition overwrites,
-    // so crash/replay semantics are unchanged
+    // (guide §2.6)
     graft.api.Overlap.run(
       () => coded.select(Seq(col("vec_id").cast("long").as("vec_id"),
           NearestCell.nearestCell(col("embedding"), cells).as("cell"),
@@ -597,18 +441,6 @@ object IvfIndex {
         .write.mode("overwrite")
         .parquet(s"${int8VecsPath(growPath)}/batch_id=$batchId"))
   }
-
-  private def int8ExtSchema(spark: SparkSession, table: String) =
-    org.apache.spark.sql.types.StructType(
-      spark.table(table).schema.fields :+
-        org.apache.spark.sql.types.StructField("batch_id",
-          org.apache.spark.sql.types.LongType))
-
-  private def int8VecsExtSchema(spark: SparkSession, table: String) =
-    org.apache.spark.sql.types.StructType(
-      spark.table(vecsTable(table)).schema.fields :+
-        org.apache.spark.sql.types.StructField("batch_id",
-          org.apache.spark.sql.types.LongType))
 
   /** [[searchInt8]] against base + every admitted extent: the int8
     * candidate stage scans base codes (bucketed) and codes extents as
@@ -629,16 +461,10 @@ object IvfIndex {
           localQueries(queries).select(col("vec_id").as("qid"), col("embedding")))
         .select(col("qid"), col("embedding").as("qv"), col("codes").as("qcodes"))
         .withColumn("cell", explode(NearestCell.nearestCells(col("qv"), cells, nprobe))))
-    val codesParts: Seq[DataFrame] =
-      spark.table(table) +:
-        (if (dirExists(spark, int8CodesPath(growPath)))
-          Seq(spark.read.schema(int8ExtSchema(spark, table))
-            .parquet(int8CodesPath(growPath)))
-        else Nil)
     val scoreq = when(col("normq") === 0, lit(-1e9)).otherwise(
       int8Dot(col("qcodes"), col("ccodes")).cast("double") /
         sqrt(col("normq").cast("double")))
-    val cand = codesParts
+    val cand = graft.api.Lsm.parts(spark, Codes, table, growPath)
       .map { p =>
         val cb = pred.map(p.filter).getOrElse(p)
           .select(col("vec_id").as("cid"), col("codes").as("ccodes"),
@@ -649,18 +475,12 @@ object IvfIndex {
       }
       .reduce(_ unionByName _)
       .select(col("qid"), col("qv"), col("cid"), scoreq.as("scoreq"))
-    val live = tombstones(spark, growPath).fold(cand)(ts =>
-      cand.join(ts.select(col("vec_id").as("cid")), Seq("cid"), "left_anti"))
+    val live = maskCandidates(spark, growPath, cand)
     val wq = Window.partitionBy(col("qid")).orderBy(col("scoreq").desc, col("cid"))
     val topC = live.withColumn("rkq", row_number().over(wq))
       .filter(col("rkq") <= rerankC)
-    val vecsBase = spark.table(vecsTable(table))
-      .select(col("vec_id"), col("embedding"))
-    val vecs = (if (dirExists(spark, int8VecsPath(growPath)))
-        vecsBase.unionByName(
-          spark.read.schema(int8VecsExtSchema(spark, table))
-            .parquet(int8VecsPath(growPath)).drop("batch_id"))
-      else vecsBase)
+    val vecs = graft.api.Lsm.parts(spark, Vecs, table, growPath)
+      .reduce(_ unionByName _)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
     topC.join(vecs, Seq("cid"))
@@ -681,81 +501,24 @@ object IvfIndex {
       nlist: Int = 0, iterations: Int = 3, buckets: Int = 16): Unit = {
     // nlist <= 0 derives the stored cell count, as [[retrain]]
     val k = if (nlist > 0) nlist else loadCentroids(spark, table).length
-    val staging = growPath + "/_retrain_staging"
-    val vecsBase = spark.table(vecsTable(table))
-      .select(col("vec_id"), col("embedding"))
-    val unioned =
-      if (dirExists(spark, int8VecsPath(growPath)))
-        vecsBase.unionByName(
-          spark.read.schema(int8VecsExtSchema(spark, table))
-            .parquet(int8VecsPath(growPath)).drop("batch_id"))
-      else vecsBase
     // metadata columns live on the CODES side — carry them through
     // the rebuild by joining codes metadata onto the live floats
     val metaCols = spark.table(table).columns.toSeq
       .filterNot(Set("vec_id", "cell", "codes", "scale_q", "normq"))
-    val codesBase = spark.table(table)
-    val codesAll =
-      if (dirExists(spark, int8CodesPath(growPath)))
-        codesBase.unionByName(
-          spark.read.schema(int8ExtSchema(spark, table))
-            .parquet(int8CodesPath(growPath)).drop("batch_id"))
-      else codesBase
-    val withMeta =
-      if (metaCols.isEmpty) unioned
-      else unioned.join(
-        codesAll.select((Seq(col("vec_id")) ++ metaCols.map(col)): _*),
-        Seq("vec_id"))
-    val live = tombstones(spark, growPath).fold(withMeta)(ts =>
-      withMeta.join(ts, Seq("vec_id"), "left_anti"))
-    live.write.mode("overwrite").parquet(staging)
-    writeInt8(spark.read.parquet(staging), table, k, iterations, buckets)
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(int8CodesPath(growPath), int8VecsPath(growPath),
-        tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    graft.api.Lsm.rebuildLive(spark, Int8Grow, table, growPath, "_retrain_staging") {
+      case Seq(codes, vecs) => Seq(
+        if (metaCols.isEmpty) vecs
+        else vecs.join(codes.select((col("vec_id") +: metaCols.map(col)): _*),
+          Seq("vec_id")))
+    }(staged => writeInt8(staged.head, table, k, iterations, buckets))
   }
 
-  /** Fold int8 extents into the bucketed base tables, apply
-    * tombstones physically to BOTH sides, clear the directories —
+  /** Fold int8 extents into the bucketed base tables and apply
+    * tombstones physically to BOTH sides ([[graft.api.Lsm.compact]]) —
     * cell/code assignments are final (frozen quantizer + per-vector
     * quantization), so compaction is a straight rewrite. */
   def compactInt8(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16): Unit = {
-    val hasExt = dirExists(spark, int8CodesPath(growPath))
-    val hasTombs = dirExists(spark, tombstonePath(growPath))
-    if (!hasExt && !hasTombs) return
-    val staging = growPath + "/_compact_staging"
-    def live(df: DataFrame) = tombstones(spark, growPath).fold(df)(ts =>
-      df.join(ts, Seq("vec_id"), "left_anti"))
-    val codes =
-      if (hasExt) spark.table(table).unionByName(
-        spark.read.schema(int8ExtSchema(spark, table))
-          .parquet(int8CodesPath(growPath)).drop("batch_id"))
-      else spark.table(table)
-    val vecs =
-      if (hasExt) spark.table(vecsTable(table)).unionByName(
-        spark.read.schema(int8VecsExtSchema(spark, table))
-          .parquet(int8VecsPath(growPath)).drop("batch_id"))
-      else spark.table(vecsTable(table))
-    // staged folds, then bucketed rewrites: each pair's two sides are
-    // independent — overlapped (guide §2.6, r18)
-    graft.api.Overlap.run(
-      () => live(codes).write.mode("overwrite").parquet(staging + "/codes"),
-      () => live(vecs).write.mode("overwrite").parquet(staging + "/vecs"))
-    graft.api.Bucketing.resetManaged(spark, table)
-    graft.api.Bucketing.resetManaged(spark, vecsTable(table))
-    graft.api.Overlap.run(
-      () => graft.api.Bucketing.writeBucketed(
-        spark.read.parquet(staging + "/codes"), table, Seq("cell"), buckets),
-      () => graft.api.Bucketing.writeBucketed(
-        spark.read.parquet(staging + "/vecs"),
-        vecsTable(table), Seq("vec_id"), buckets))
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(int8CodesPath(growPath), int8VecsPath(growPath),
-        tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-  }
+      buckets: Int = 16): Unit =
+    graft.api.Lsm.compact(spark, Int8Grow, table, growPath,
+      graft.api.Lsm.writeBase(Int8Grow, table, _, buckets))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,43 +37,39 @@ import org.apache.spark.sql.functions._
   * doc-bucketed side. Nothing corpus-sized is broadcast, collected,
   * or re-shuffled at search time.
   *
-  * Growth follows the LSM extent discipline shared by the other two
-  * indexes: [[admit]] lands a batch's postings/docs/stats-delta in
-  * the batch's OWN partitions (replay = overwrite itself:
-  * idempotent); [[searchGrown]] scans base + extents as SEPARATE
-  * parts (a union before the per-part term filter would erase the
-  * base bucketing); [[forget]] tombstones ids without rewriting
-  * anything — masked at search (results, df AND stats), applied
-  * physically by [[compact]]. There is no retrain stage: an inverted
-  * index has no trained state (nothing analogous to the IVF coarse
-  * quantizer), so the lifecycle closes at compact by construction.
-  *
-  * Caller contract: doc_ids are unique across base + extents, and a
-  * tombstoned id must not be re-admitted before a [[compact]] clears
-  * the tombstones — [[admit]] enforces that with an O(batch)
-  * anti-join guard (exempting the batch's own prior partition, which
-  * is crash-replay, not rebirth — the
-  * [[graft.dedup.DedupIndex.flagAndAdmit]] rule).
+  * Growth is the [[graft.api.Lsm]] lifecycle over two keyed sides —
+  * postings and docs — plus a keyless per-batch stats delta (n_docs,
+  * total_toks) that rides each doc-side write as observed metrics.
+  * There is no retrain stage: an inverted index has no trained state
+  * (nothing analogous to the IVF coarse quantizer), so the lifecycle
+  * closes at compact by construction.
   */
 object PostingsIndex {
 
+  private val Postings = graft.api.Lsm.Side("postings", "", Seq("tok"),
+    "tok STRING, doc_id LONG, tf LONG, dl LONG, pos ARRAY<LONG>")
+  private val Docs = graft.api.Lsm.Side("docs", "_docs", Seq("doc_id"),
+    "doc_id LONG, dl LONG")
+  private val Grow = graft.api.Lsm.Grow("doc_id", Seq(Postings, Docs),
+    derived = Seq("stats"))
+
   /** Per-doc side: (doc_id, dl), bucketed on doc_id. */
-  def docsTable(table: String): String = table + "_docs"
+  def docsTable(table: String): String = Docs.base(table)
 
   /** 1-row corpus stats: (n_docs, total_toks). */
   def statsTable(table: String): String = table + "_stats"
 
   /** Postings-extent directory of a growing index. */
-  def postingsPath(growPath: String): String = growPath + "/postings"
+  def postingsPath(growPath: String): String = Postings.path(growPath)
 
   /** Doc-side extent directory. */
-  def docsPath(growPath: String): String = growPath + "/docs"
+  def docsPath(growPath: String): String = Docs.path(growPath)
 
   /** Per-batch stats-delta directory. */
   def statsPath(growPath: String): String = growPath + "/stats"
 
   /** Tombstone directory (forgotten doc_ids). */
-  def tombstonePath(growPath: String): String = growPath + "/tombstones"
+  def tombstonePath(growPath: String): String = graft.api.Lsm.tombstonePath(growPath)
 
   /** (doc_id, t=tokens, dl) of a doc batch — ONE tokenize pass feeds
     * postings, doc side and stats delta (callers cache it). */
@@ -95,58 +91,44 @@ object PostingsIndex {
         sort_array(collect_list(col("p").cast("long"))).as("pos"))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("pos"))
 
+  /** Write a doc side (doc_id, dl) through `write` with the corpus
+    * stats riding it as observed metrics — no extra pass — then hand
+    * the 1-row (n_docs, total_toks) frame to `stats`. Every stats row
+    * and stats delta is written here (the Observation caveat is on
+    * [[graft.api.Lsm.compactTiered]]). */
+  private def withStats(docs: DataFrame)(write: DataFrame => Unit)(
+      stats: DataFrameWriter[Row] => Unit): Unit = {
+    val obs = Observation()
+    write(docs.observe(obs, count(lit(1)).as("n_docs"),
+      coalesce(sum(col("dl")), lit(0L)).as("total_toks")))
+    val m = obs.get
+    val spark = docs.sparkSession
+    import spark.implicits._
+    stats(Seq((m("n_docs").asInstanceOf[Long], m("total_toks").asInstanceOf[Long]))
+      .toDF("n_docs", "total_toks").coalesce(1).write.mode("overwrite"))
+  }
+
+  /** The bucketed base: postings side and doc side (+ its stats table)
+    * are independent writes, overlapped (guide §2.6). */
+  private def writeIndex(postings: DataFrame, docs: DataFrame, table: String,
+      buckets: Int): Unit =
+    graft.api.Overlap.run(
+      () => graft.api.Bucketing.writeBucketed(postings, table, Seq("tok"), buckets),
+      () => withStats(docs)(graft.api.Bucketing.writeBucketed(
+          _, docsTable(table), Seq("doc_id"), buckets))(
+        _.format("parquet").saveAsTable(statsTable(table))))
+
   /** Tokenize `docs` (doc_id, text) and persist the index under
     * `<table>` / `<table>_docs` / `<table>_stats`. */
   def write(docs: DataFrame, table: String, buckets: Int = 16): Unit = {
-    val spark = docs.sparkSession
-    Seq(table, docsTable(table), statsTable(table))
-      .foreach(n => graft.api.Bucketing.resetManaged(spark, n))
+    drop(docs.sparkSession, table)
     val tok = tokenized(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // postings side and doc side are independent readers of the one
-      // tokenize cache — primed once, then overlapped (guide §2.6,
-      // r18). The corpus stats RIDE the doc-side write as observed
-      // metrics (r17, guide §1 job-count discipline): same values the
-      // old third cache scan computed, zero extra pass — the stats
-      // table then writes from a 1-row local relation, chained after
-      // its own obs.
+      // both sides read the one tokenize cache — primed once
       graft.api.Overlap.prime(tok)
-      graft.api.Overlap.run(
-        () => graft.api.Bucketing.writeBucketed(
-          postingsOf(tok), table, Seq("tok"), buckets),
-        () => {
-          val obs = org.apache.spark.sql.Observation()
-          graft.api.Bucketing.writeBucketed(
-            tok.select(col("doc_id"), col("dl"))
-              .observe(obs, count(lit(1)).as("n_docs"),
-                coalesce(sum(col("dl")), lit(0L)).as("total_toks")),
-            docsTable(table), Seq("doc_id"), buckets)
-          writeStatsRow(spark, obs, statsTable(table))
-        })
+      writeIndex(postingsOf(tok), tok.select(col("doc_id"), col("dl")), table, buckets)
     } finally tok.unpersist(blocking = true)
-  }
-
-  /** Persist an observed (n_docs, total_toks) pair as the 1-row stats
-    * table — a local-relation write, no data scan.
-    *
-    * Deployment note (ADVICE r17 #3): Observation metrics are
-    * accumulator-backed; under speculative execution or stage retries
-    * a duplicated successful task can over-count them. This engine
-    * runs local[] with speculation off (Spark's default), where
-    * observed values equal the written table's by construction; a
-    * cluster deployment that enables `spark.speculation` should gate
-    * the observe-derived stats behind a recompute-from-table flag.
-    * The same note covers every observe-rides-the-write site in the
-    * LSM families (stats deltas, tombstone survivor counts). */
-  private def writeStatsRow(spark: SparkSession,
-      obs: org.apache.spark.sql.Observation, table: String): Unit = {
-    import spark.implicits._
-    val m = obs.get
-    Seq((m("n_docs").asInstanceOf[Long], m("total_toks").asInstanceOf[Long]))
-      .toDF("n_docs", "total_toks")
-      .coalesce(1).write.mode("overwrite").format("parquet")
-      .saveAsTable(table)
   }
 
   /** Drop all parts of a persisted index. */
@@ -181,154 +163,43 @@ object PostingsIndex {
     require(shards.nonEmpty, "merge needs at least one shard")
     require(!shards.exists(_._1 == outTable),
       "merge target must not be one of the shards")
-    // Like every other grow-state entry point (admit/forget/
-    // compactTiered), finish any interrupted tiered swap BEFORE
-    // reading a shard's extents/tombstones — merging a shard that
-    // crashed mid-swap would bake half-swapped state permanently
-    // into the output index (ADVICE r13).
-    shards.foreach { case (_, grow) =>
-      grow.foreach(g => graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(g)))
+    val parts = shards.map { case (tbl, grow) =>
+      grow.fold(Seq(spark.table(tbl), spark.table(docsTable(tbl))))(
+        graft.api.Lsm.live(spark, Grow, tbl, _))
     }
-    def live(tbl: String, grow: Option[String]): (DataFrame, DataFrame) = {
-      val ts = grow.flatMap(g => tombstones(spark, g))
-      val post = Seq(spark.table(tbl)) ++ grow.toSeq.collect {
-        case g if dirExists(spark, postingsPath(g)) =>
-          spark.read.schema(PostingsExtSchema)
-            .parquet(postingsPath(g)).drop("batch_id")
-      }
-      val docsSide = Seq(spark.table(docsTable(tbl))) ++ grow.toSeq.collect {
-        case g if dirExists(spark, docsPath(g)) =>
-          spark.read.schema(DocsExtSchema)
-            .parquet(docsPath(g)).drop("batch_id")
-      }
-      def mask(df: DataFrame) =
-        ts.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-      (mask(post.reduce(_ unionByName _)), mask(docsSide.reduce(_ unionByName _)))
-    }
-    val parts = shards.map { case (tbl, grow) => live(tbl, grow) }
-    Seq(outTable, docsTable(outTable), statsTable(outTable))
-      .foreach(n => graft.api.Bucketing.resetManaged(spark, n))
-    // merged postings side and doc side are independent — overlapped
-    // (guide §2.6, r18); merged stats ride the doc-side write as
-    // observed metrics (r17)
-    graft.api.Overlap.run(
-      () => graft.api.Bucketing.writeBucketed(
-        parts.map(_._1).reduce(_ unionByName _), outTable, Seq("tok"), buckets),
-      () => {
-        val obs = org.apache.spark.sql.Observation()
-        graft.api.Bucketing.writeBucketed(
-          parts.map(_._2).reduce(_ unionByName _)
-            .observe(obs, count(lit(1)).as("n_docs"),
-              coalesce(sum(col("dl")), lit(0L)).as("total_toks")),
-          docsTable(outTable), Seq("doc_id"), buckets)
-        writeStatsRow(spark, obs, statsTable(outTable))
-      })
+    drop(spark, outTable)
+    writeIndex(parts.map(_(0)).reduce(_ unionByName _),
+      parts.map(_(1)).reduce(_ unionByName _), outTable, buckets)
   }
 
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private val PostingsExtSchema =
-    "tok STRING, doc_id LONG, tf LONG, dl LONG, pos ARRAY<LONG>, batch_id LONG"
-  private val DocsExtSchema = "doc_id LONG, dl LONG, batch_id LONG"
   private val StatsExtSchema = "n_docs LONG, total_toks LONG, batch_id LONG"
-  private val TombSchema = "doc_id LONG, batch_id LONG"
-
-  private def tombstones(spark: SparkSession, growPath: String): Option[DataFrame] =
-    if (dirExists(spark, tombstonePath(growPath)))
-      Some(spark.read.schema(TombSchema)
-        .parquet(tombstonePath(growPath)).select(col("doc_id")))
-    else None
 
   /** Admit one batch of new docs (doc_id, text): tokenize the BATCH
     * only and land its postings, doc rows and stats delta as the
     * batch's own extent partitions — O(batch) work, the index never
-    * rewrites. Guards the tombstone-rebirth contract (see object
-    * scaladoc): a batch id that is tombstoned and NOT in this batch's
-    * own prior partition (crash replay) is rejected. The exemption
-    * set unions the batch's own POSTINGS partition ids with its docs
-    * partition ids: admit writes postings first, so a crash between
-    * the postings write and the docs write followed by a forget() of
-    * one of the batch's ids must still recognize the replay as the
-    * batch's own (ADVICE r11 #4 — DedupIndex.flagAndAdmit checks both
-    * of its partitions the same way). Anything tombstoned OUTSIDE the
-    * batch's own partitions is a rebirth and is rejected. */
+    * rewrites. */
   def admit(spark: SparkSession, table: String, growPath: String,
       batch: DataFrame, batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13): a
-    // mutation landing between a crash and its recovery must not be
-    // built on half-swapped state, and — with the plan's recorded
-    // partition sets — can never be deleted by a later replay
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    tombstones(spark, growPath).foreach { ts =>
-      val ownParts = Seq(
-        (s"${docsPath(growPath)}/batch_id=$batchId", "doc_id LONG, dl LONG"),
-        (s"${postingsPath(growPath)}/batch_id=$batchId",
-          "tok STRING, doc_id LONG, tf LONG, dl LONG, pos ARRAY<LONG>"))
-        .collect { case (p, sch) if dirExists(spark, p) =>
-          spark.read.schema(sch).parquet(p).select(col("doc_id")) }
-      val own =
-        if (ownParts.nonEmpty) ownParts.reduce(_.unionAll(_)).distinct()
-        else spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-      val reborn = batch.select(col("doc_id").cast("long").as("doc_id"))
-        .join(ts, Seq("doc_id"), "left_semi")
-        .join(own, Seq("doc_id"), "left_anti")
-        .count()
-      require(reborn == 0,
-        s"admit(batch $batchId): $reborn doc_id(s) are tombstoned in this " +
-          "index and not part of this batch's own prior partition — a " +
-          "forgotten id must not be re-admitted before compact() clears " +
-          "the tombstones")
-    }
+    graft.api.Lsm.admitting(spark, Grow, growPath, batch, batchId)
     val tok = tokenized(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // postings extent and docs extent (+ its stats delta) are
-      // independent readers of the one tokenize cache — primed once,
-      // then overlapped (guide §2.6, r18). The tombstone-rebirth
-      // exemption above already unions BOTH partitions' ids, so a
-      // crash leaving either write committed replays exactly as
-      // before.
       graft.api.Overlap.prime(tok)
       graft.api.Overlap.run(
         () => postingsOf(tok).write.mode("overwrite")
           .parquet(s"${postingsPath(growPath)}/batch_id=$batchId"),
-        () => {
-          // stats delta rides the doc-side extent write as observed
-          // metrics (r17) — same values, one fewer cache scan per batch
-          val obs = org.apache.spark.sql.Observation()
-          tok.select(col("doc_id"), col("dl"))
-            .observe(obs, count(lit(1)).as("n_docs"),
-              coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
-            .write.mode("overwrite")
-            .parquet(s"${docsPath(growPath)}/batch_id=$batchId")
-          val m = obs.get
-          import spark.implicits._
-          Seq((m("n_docs").asInstanceOf[Long], m("total_toks").asInstanceOf[Long]))
-            .toDF("n_docs", "total_toks")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"${statsPath(growPath)}/batch_id=$batchId")
-        })
+        () => withStats(tok.select(col("doc_id"), col("dl")))(
+            _.write.mode("overwrite").parquet(s"${docsPath(growPath)}/batch_id=$batchId"))(
+          _.parquet(s"${statsPath(growPath)}/batch_id=$batchId")))
     } finally tok.unpersist(blocking = true)
   }
 
-  /** Forget documents (right-to-be-forgotten) WITHOUT rewriting: ids
-    * land as the batch's own tombstone partition; [[searchGrown]]
-    * masks them out of results, df and the corpus stats;
-    * [[compact]] applies them physically. Ids should reference
-    * indexed documents — a stray id is benign (every correction joins
-    * against the index by id, so it contributes nothing). */
+  /** Forget documents (right-to-be-forgotten) WITHOUT rewriting:
+    * [[searchGrown]] masks them out of results, df and the corpus
+    * stats; [[compact]] applies them physically. */
   def forget(spark: SparkSession, growPath: String, ids: DataFrame,
-      batchId: Long): Unit = {
-    // finish any interrupted tiered swap FIRST (review r13) — see
-    // the admit-side comment
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    ids.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("overwrite")
-      .parquet(s"${tombstonePath(growPath)}/batch_id=$batchId")
-  }
+      batchId: Long): Unit =
+    graft.api.Lsm.forget(spark, Grow, growPath, ids, batchId)
 
   /** BM25 top-k against the base index only (no growth dirs). Same
     * contract as [[Retrieval.bm25TopK]] over the indexed corpus:
@@ -358,25 +229,15 @@ object PostingsIndex {
     * queries). */
   def searchGrown(spark: SparkSession, table: String, growPath: String,
       queries: DataFrame, k: Int): DataFrame = {
-    val parts: Seq[DataFrame] =
-      spark.table(table) +:
-        (if (dirExists(spark, postingsPath(growPath)))
-          Seq(spark.read.schema(PostingsExtSchema)
-            .parquet(postingsPath(growPath)).drop("batch_id"))
-        else Nil)
     val statsParts: Seq[DataFrame] =
-      if (dirExists(spark, statsPath(growPath)))
+      if (graft.api.Lsm.exists(spark, statsPath(growPath)))
         Seq(spark.read.schema(StatsExtSchema)
           .parquet(statsPath(growPath)).select(col("n_docs"), col("total_toks")))
       else Nil
-    val docsParts: Seq[DataFrame] =
-      spark.table(docsTable(table)) +:
-        (if (dirExists(spark, docsPath(growPath)))
-          Seq(spark.read.schema(DocsExtSchema)
-            .parquet(docsPath(growPath)).drop("batch_id"))
-        else Nil)
-    searchParts(spark, parts, spark.table(statsTable(table)),
-      tombstones(spark, growPath).map(ts => (ts, docsParts)),
+    searchParts(spark, graft.api.Lsm.parts(spark, Postings, table, growPath),
+      spark.table(statsTable(table)),
+      graft.api.Lsm.tombstones(spark, Grow, growPath)
+        .map(ts => (ts, graft.api.Lsm.parts(spark, Docs, table, growPath))),
       statsParts, queries, k, excludeSelf = false)
   }
 
@@ -471,18 +332,12 @@ object PostingsIndex {
       java.util.Arrays.asList(pRows: _*), pProj.schema)
     val terms: Seq[String] =
       pRows.map(_.get(2).asInstanceOf[String]).distinct.toSeq
-    val parts: Seq[DataFrame] =
-      spark.table(table) +:
-        (if (dirExists(spark, postingsPath(growPath)))
-          Seq(spark.read.schema(PostingsExtSchema)
-            .parquet(postingsPath(growPath)).drop("batch_id"))
-        else Nil)
-    val cand = parts
+    val cand = graft.api.Lsm.parts(spark, Postings, table, growPath)
       .map(_.filter(col("tok").isin(terms: _*))
         .select(col("tok"), col("doc_id"), col("pos")))
       .reduce(_ unionByName _)
-    val live = tombstones(spark, growPath).fold(cand)(ts =>
-      cand.join(ts, Seq("doc_id"), "left_anti"))
+    val live = graft.api.Lsm.mask(Grow, cand,
+      graft.api.Lsm.tombstones(spark, Grow, growPath))
     // phrase length per qid: the tiny frame every occurrence test
     // joins against (bounded by the query contract; plan-visible cap)
     val plen = pLocal.groupBy(col("qid"))
@@ -499,171 +354,39 @@ object PostingsIndex {
   }
 
   /** Fold every extent into the bucketed base tables, apply
-    * tombstones physically (postings AND doc side), recompute the
-    * stats row exactly from the compacted doc side, and clear the
-    * growth directories. Assignments are final (tokenization is
-    * per-doc), so compaction is a straight rewrite — and since an
-    * inverted index has no trained state, this CLOSES the lifecycle
-    * (no retrain stage exists to need). Callers must not run it while
-    * admissions or forgets are active. */
+    * tombstones physically (postings AND doc side) and recompute the
+    * stats row exactly from the compacted doc side — the
+    * [[graft.api.Lsm.compact]] lifecycle. Assignments are final
+    * (tokenization is per-doc), so compaction is a straight rewrite. */
   def compact(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16): Unit = {
-    val hasExt = dirExists(spark, postingsPath(growPath))
-    val hasTombs = dirExists(spark, tombstonePath(growPath))
-    if (!hasExt && !hasTombs) return
-    val staging = growPath + "/_compact_staging"
-    def live(df: DataFrame) = tombstones(spark, growPath).fold(df)(ts =>
-      df.join(ts, Seq("doc_id"), "left_anti"))
-    val postings =
-      if (hasExt) spark.table(table).unionByName(
-        spark.read.schema(PostingsExtSchema)
-          .parquet(postingsPath(growPath)).drop("batch_id"))
-      else spark.table(table)
-    val docs =
-      if (hasExt) spark.table(docsTable(table)).unionByName(
-        spark.read.schema(DocsExtSchema)
-          .parquet(docsPath(growPath)).drop("batch_id"))
-      else spark.table(docsTable(table))
-    // staged folds, then bucketed rewrites: each pair's two sides are
-    // independent — overlapped (guide §2.6, r18)
-    graft.api.Overlap.run(
-      () => live(postings).write.mode("overwrite").parquet(staging + "/postings"),
-      () => live(docs).write.mode("overwrite").parquet(staging + "/docs"))
-    Seq(table, docsTable(table), statsTable(table))
-      .foreach(n => graft.api.Bucketing.resetManaged(spark, n))
-    graft.api.Overlap.run(
-      () => graft.api.Bucketing.writeBucketed(
-        spark.read.parquet(staging + "/postings"), table, Seq("tok"), buckets),
-      () => {
-        // stats ride the doc-side rewrite as observed metrics (r17):
-        // same values the old post-write table scan recomputed
-        val obs = org.apache.spark.sql.Observation()
-        graft.api.Bucketing.writeBucketed(
-          spark.read.parquet(staging + "/docs")
-            .observe(obs, count(lit(1)).as("n_docs"),
-              coalesce(sum(col("dl")), lit(0L)).as("total_toks")),
-          docsTable(table), Seq("doc_id"), buckets)
-        writeStatsRow(spark, obs, statsTable(table))
-      })
-    val root = new org.apache.hadoop.fs.Path(growPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(postingsPath(growPath), docsPath(growPath), statsPath(growPath),
-        tombstonePath(growPath), staging)
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-  }
+      buckets: Int = 16): Unit =
+    graft.api.Lsm.compact(spark, Grow, table, growPath,
+      staged => writeIndex(staged(0), staged(1), table, buckets),
+      alsoReset = Seq(statsTable(table)))
 
-  /** The extent batch_id the tiered compactor consolidates into
-    * (shared across the LSM families — [[graft.api.Lsm]]). */
-  val ConsolidatedBatchId: Long = graft.api.Lsm.ConsolidatedBatchId
-
-  /** Size-tiered compaction (VERDICT r11 #4): bound write
-    * amplification by NOT rewriting the base on every compaction.
-    * When the extents hold less than `maxExtentFraction` of the
-    * base's documents, the extents alone are folded into ONE
-    * consolidated extent partition (batch_id = [[ConsolidatedBatchId]])
-    * with the tombstones that touch extent docs applied physically;
-    * tombstones referencing base docs (or stray ids) REMAIN as
-    * tombstones, still masked at search time, and are applied
-    * physically only by the next over-threshold (full) compaction —
-    * which this method delegates to via [[compact]] when the extent
-    * mass crosses the threshold.
-    *
-    * 100 TB posture: this is the difference between "nightly job" and
-    * "impossible" — a full [[compact]] is O(index) by definition (the
-    * whole base rewrites through one bucketed shuffle), so daily 0.1%
-    * crawl batches would each pay a 100-TB rewrite; the tiered path
-    * is O(extent mass) (measured in DevScalePostings: cost tracks the
-    * extent rows, flat in the base size), and the base pays its
-    * O(index) rewrite only once per ~maxExtentFraction of growth —
-    * classic LSM write-amplification bounding. Search cost is
-    * unchanged either way (base + ONE extent part vs base alone).
+  /** Size-tiered compaction ([[graft.api.Lsm.compactTiered]], VERDICT
+    * r11 #4). The size measure is document mass: the base stats row's
+    * n_docs against the summed stats deltas. The consolidated stats
+    * delta rides the staged doc-side write, so applied tombstones stop
+    * counting exactly as searchGrown's correction had them.
     *
     * Semantics contract (oracle-checked by q_bm25_compact_tiered,
     * plan/file-level assertions in PostingsIndexSpec): searchGrown
     * after a tiered compaction ≡ before ≡ brute-force BM25 over the
     * live doc set, and below threshold the base tables' files are
-    * untouched. Same caller contract as [[compact]]: not concurrent
-    * with admissions/forgets. */
+    * untouched. */
   def compactTiered(spark: SparkSession, table: String, growPath: String,
-      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit = {
-    // AUTO-RECOVER first (r13): re-running compactTiered is the
-    // natural operator response to a crash, but staging over a
-    // HALF-SWAPPED index would consolidate inconsistent state — an
-    // interrupted generation must finish before a new one stages
-    // (no-op when there is nothing to recover)
-    graft.api.Lsm.recover(spark, graft.api.Lsm.stagingRoot(growPath))
-    val hasExt = dirExists(spark, postingsPath(growPath))
-    if (!hasExt) {
-      // no extents: nothing to consolidate; any tombstones touch only
-      // the base, which the tiered path never rewrites — full fold
-      return compact(spark, table, growPath, buckets)
-    }
-    // two independent 1-row threshold reads — overlapped (guide §2.6)
-    val heads = graft.api.Overlap.all(Seq(
-      () => spark.table(statsTable(table))
-        .select(col("n_docs")).head().getLong(0),
-      () => spark.read.schema(StatsExtSchema)
-        .parquet(statsPath(growPath))
-        .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n"))
-        .head().getLong(0)))
-    val (baseDocs, extDeltas) = (heads(0), heads(1))
-    if (baseDocs <= 0 || extDeltas.toDouble / baseDocs >= maxExtentFraction)
-      return compact(spark, table, growPath, buckets)
-
-    val staging = graft.api.Lsm.stagingRoot(growPath)
-    val ts = tombstones(spark, growPath)
-    val extPostings = spark.read.schema(PostingsExtSchema)
-      .parquet(postingsPath(growPath)).drop("batch_id")
-    val extDocs = spark.read.schema(DocsExtSchema)
-      .parquet(docsPath(growPath)).drop("batch_id")
-    def liveExt(df: DataFrame) =
-      ts.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    // consolidated extent = live extent rows only; stats delta
-    // recomputed exactly from the consolidated doc side (so applied
-    // tombstones stop counting, exactly as searchGrown's correction
-    // had them)
-    // the three staged writes (postings / docs+stats / surviving
-    // tombstones) are independent — overlapped (guide §2.6, r18); the
-    // survivor count rides the tombstone write as an observed metric
-    // instead of a read-back count job
-    val remainingCnt = new java.util.concurrent.atomic.AtomicLong(0L)
-    graft.api.Overlap.run(Seq(
-      () => liveExt(extPostings).write.mode("overwrite")
-        .parquet(staging + "/postings"),
-      () => {
-        // consolidated stats delta rides the staged doc-side write as
-        // observed metrics (r17) — exactly the staged consolidated doc
-        // side's (count, Σdl): applied tombstones stop counting, as
-        // searchGrown's correction had them
-        val obs = org.apache.spark.sql.Observation()
-        liveExt(extDocs)
-          .observe(obs, count(lit(1)).as("n_docs"),
-            coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
-          .write.mode("overwrite").parquet(staging + "/docs")
-        val m = obs.get
-        import spark.implicits._
-        Seq((m("n_docs").asInstanceOf[Long], m("total_toks").asInstanceOf[Long]))
-          .toDF("n_docs", "total_toks")
-          .coalesce(1).write.mode("overwrite").parquet(staging + "/stats")
-      }) ++
-      // tombstones that did NOT hit an extent doc survive (base docs
-      // and stray ids — strays stay benign: every correction joins by
-      // id). DISTINCT: a twice-forgotten id must survive as one row.
-      ts.toSeq.map { t => () =>
-        val obsT = org.apache.spark.sql.Observation()
-        t.distinct().join(extDocs, Seq("doc_id"), "left_anti")
-          .observe(obsT, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(staging + "/tombstones")
-        remainingCnt.set(obsT.get("n").asInstanceOf[Long])
-      }: _*)
-    // crash-ordered checked swap — graft.api.Lsm.swapConsolidated
-    // (survivor mask lands additively first, extent dirs swap checked,
-    // old tombstone partitions leave last)
-    graft.api.Lsm.swapConsolidated(spark, staging,
-      Seq(staging + "/postings" -> postingsPath(growPath),
-        staging + "/docs" -> docsPath(growPath),
-        staging + "/stats" -> statsPath(growPath)),
-      if (remainingCnt.get > 0) Some(staging + "/tombstones") else None,
-      tombstonePath(growPath))
-  }
+      buckets: Int = 16, maxExtentFraction: Double = 0.2): Unit =
+    graft.api.Lsm.compactTiered(spark, Grow, table, growPath, maxExtentFraction,
+      full = () => compact(spark, table, growPath, buckets),
+      sizes = (
+        () => spark.table(statsTable(table)).select(col("n_docs")).head().getLong(0),
+        () => spark.read.schema(StatsExtSchema).parquet(statsPath(growPath))
+          .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n")).head().getLong(0)),
+      stage = {
+        case (Docs, live, root) =>
+          withStats(live)(_.write.mode("overwrite").parquet(s"$root/${Docs.dir}"))(
+            _.parquet(s"$root/stats"))
+        case (side, live, root) => graft.api.Lsm.stageSide(side, live, root)
+      })
 }

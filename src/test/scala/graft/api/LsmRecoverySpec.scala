@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
   * compaction killed inside the swap window — including the
   * previously-documented-only residual, "between one extent dir's
   * delete and its rename" — must be mechanically finishable, with
-  * results identical to a never-crashed twin, on at least two LSM
-  * families (PostingsIndex + DedupIndex). */
+  * results identical to a never-crashed twin, for every LSM family
+  * (the crash-window table below) and through every grow-state
+  * consumer (a direct compact after the crash recovers first). */
 class LsmRecoverySpec extends SparkSpec {
 
   import graft.text.{PostingsIndex, TextFunctions}
-  import graft.dedup.DedupIndex
+  import graft.dedup.{DedupIndex, FingerprintIndex}
+  import graft.sim.IvfIndex
 
   private def docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -297,4 +299,224 @@ class LsmRecoverySpec extends SparkSpec {
     assert(Lsm.recover(spark, staging))
     PostingsIndex.drop(spark, "lsmrec_guard")
   }
+
+  // ---- the crash-window table: family x failpoint label ---------------
+
+  /** One index family under test. `setup` builds a base, one extent
+    * batch and tombstones on BOTH (so survivors exist), below the
+    * tiered threshold, and returns the grow path. `sides` lists each
+    * keyed side's (base table, extent dir) and `key` the id column.
+    * `observe` reads the family's results; the flag families read them
+    * by flagging a probe batch `n` (which also admits its survivors).
+    * `admitMore` is one later admission. */
+  private case class Family(name: String, key: String,
+      sides: (String, String) => Seq[(String, String)], setup: String => String,
+      tiered: (String, String) => Unit, compact: (String, String) => Unit,
+      observe: (String, String, Long) => Any, admitMore: (String, String) => Unit,
+      drop: String => Unit)
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def sinkOf(root: String): String = root + "_sink"
+
+  private def exists(dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  private val postingsFamily = Family("PostingsIndex", "doc_id",
+    sides = (t, root) => Seq(t -> PostingsIndex.postingsPath(root),
+      PostingsIndex.docsTable(t) -> PostingsIndex.docsPath(root)),
+    setup = table => {
+      PostingsIndex.write(docs.filter(col("doc_id") % 10 < 8), table)
+      val root = tmp(table)
+      PostingsIndex.admit(spark, table, root,
+        docs.filter(col("doc_id") % 10 === 8), 0L)
+      PostingsIndex.forget(spark, root,
+        docs.filter(col("doc_id") % 10 < 9 && col("doc_id") % 4 === 0)
+          .select(col("doc_id")), 100L)
+      root
+    },
+    tiered = (t, root) => PostingsIndex.compactTiered(spark, t, root),
+    compact = (t, root) => PostingsIndex.compact(spark, t, root),
+    observe = (t, root, _) => rows(PostingsIndex.searchGrown(spark, t, root, queries(docs), 3)),
+    admitMore = (t, root) => PostingsIndex.admit(spark, t, root,
+      docs.filter(col("doc_id") % 10 === 9), 1L),
+    drop = t => PostingsIndex.drop(spark, t))
+
+  private def emb = spark.read.parquet(s"${sf("embeddings")}/embeddings.parquet")
+
+  private val ivfFamily = Family("IvfIndex", "vec_id",
+    sides = (t, root) => Seq(t -> IvfIndex.extentPath(root)),
+    setup = table => {
+      IvfIndex.write(emb.filter(col("vec_id") % 8 < 7), table, buckets = 4)
+      val root = tmp(table)
+      IvfIndex.admit(spark, table, root, emb.filter(col("vec_id") % 8 === 7), 0L)
+      IvfIndex.delete(spark, root,
+        emb.filter(col("vec_id") % 9 === 0).select(col("vec_id")), 100L)
+      root
+    },
+    tiered = (t, root) => IvfIndex.compactTiered(spark, t, root, buckets = 4),
+    compact = (t, root) => IvfIndex.compact(spark, t, root, buckets = 4),
+    observe = (t, root, _) => {
+      import spark.implicits._
+      IvfIndex.searchGrown(spark, t, root, emb.filter(col("vec_id") < 10), 5)
+        .select(col("qid"), col("cid"), col("sim"), col("rk"))
+        .as[(Long, Long, Double, Int)].collect().sorted.toSeq
+    },
+    // copies of deleted vectors under fresh ids: they must surface
+    admitMore = (t, root) => IvfIndex.admit(spark, t, root,
+      emb.filter(col("vec_id") % 9 === 0).withColumn("vec_id", col("vec_id") + 100000L), 1L),
+    drop = t => Seq(t, s"${t}_centroids").foreach(Bucketing.resetManaged(spark, _)))
+
+  private val dedupFamily = Family("DedupIndex", "doc_id",
+    sides = (t, root) => Seq(DedupIndex.bandsTable(t) -> DedupIndex.extentBandsPath(root),
+      DedupIndex.svTable(t) -> DedupIndex.extentSvPath(root)),
+    setup = table => {
+      DedupIndex.write(docs.filter(col("doc_id") % 8 < 7), table, buckets = 4)
+      val root = tmp(table)
+      DedupIndex.flagAndAdmit(spark, table, root,
+        docs.filter(col("doc_id") % 8 === 7), 0L, sinkOf(root))
+      DedupIndex.forget(spark, root,
+        docs.filter(col("doc_id") % 9 === 0).select(col("doc_id")), 100L)
+      root
+    },
+    tiered = (t, root) => DedupIndex.compactTiered(spark, t, root, buckets = 4),
+    compact = (t, root) => DedupIndex.compact(spark, t, root, buckets = 4),
+    // probes: copies of forgotten docs (their witness is masked) and
+    // of live base docs (flagged)
+    observe = (t, root, n) => {
+      import spark.implicits._
+      DedupIndex.flagAndAdmit(spark, t, root,
+        docs.filter(col("doc_id") % 9 === 0 ||
+            (col("doc_id") % 8 === 3 && col("doc_id") % 2 === 1))
+          .select(col("doc_id") + n * 100000L as "doc_id", col("text")),
+        n, sinkOf(root))
+      spark.read
+        .schema("doc_id LONG, dup_of LONG, common LONG, na LONG, nb LONG, batch_id LONG")
+        .parquet(sinkOf(root)).filter(col("batch_id") === n)
+        .select(col("doc_id"), col("dup_of")).as[(Long, Long)].collect().toSet
+    },
+    admitMore = (t, root) => DedupIndex.flagAndAdmit(spark, t, root,
+      docs.filter(col("doc_id") % 9 === 0)
+        .select(col("doc_id") + 800000L as "doc_id", col("text")), 8L, sinkOf(root)),
+    drop = t => DedupIndex.drop(spark, t))
+
+  private val Bits = 56
+  private def fp(i: Long): Long = (i * 0x9E3779B97F4AL) & ((1L << Bits) - 1)
+
+  private val fingerprintFamily = Family("FingerprintIndex", "id",
+    sides = (t, root) => Seq(FingerprintIndex.bandsTable(t) -> FingerprintIndex.extentPath(root)),
+    setup = table => {
+      import spark.implicits._
+      FingerprintIndex.write((10L to 29L).map(i => (i, fp(i))).toDF("media_id", "fp"),
+        "media_id", "fp", table, Bits, maxHamming = 7, buckets = 4)
+      val root = tmp(table)
+      FingerprintIndex.flagAndAdmit(spark, table, root,
+        Seq((30L, fp(30L)), (31L, fp(31L))).toDF("media_id", "fp"),
+        "media_id", "fp", Bits, 7, 0L, sinkOf(root))
+      FingerprintIndex.forget(spark, root, Seq(10L, 30L).toDF("id"), 100L)
+      root
+    },
+    tiered = (t, root) => FingerprintIndex.compactTiered(spark, t, root, buckets = 4),
+    compact = (t, root) => FingerprintIndex.compact(spark, t, root, buckets = 4),
+    // probes: near-dups of a live base item, the forgotten base item,
+    // the live extent item, the forgotten extent item and item 40
+    // (admitted later)
+    observe = (t, root, n) => {
+      import spark.implicits._
+      FingerprintIndex.flagAndAdmit(spark, t, root,
+        Seq(11L, 10L, 31L, 30L, 40L).zipWithIndex
+          .map { case (i, j) => (n * 1000L + j, fp(i) ^ 1L) }.toDF("media_id", "fp"),
+        "media_id", "fp", Bits, 7, n, sinkOf(root))
+      spark.read.schema("id LONG, dup_of LONG, hamming LONG, batch_id LONG")
+        .parquet(sinkOf(root)).filter(col("batch_id") === n)
+        .select(col("id"), col("dup_of")).as[(Long, Long)].collect().toSet
+    },
+    admitMore = (t, root) => {
+      import spark.implicits._
+      FingerprintIndex.flagAndAdmit(spark, t, root,
+        Seq((40L, fp(40L))).toDF("media_id", "fp"),
+        "media_id", "fp", Bits, 7, 8L, sinkOf(root))
+    },
+    drop = t => FingerprintIndex.drop(spark, t))
+
+  private val families = Seq(postingsFamily, ivfFamily, dedupFamily, fingerprintFamily)
+
+  /** Each side's live ids as a sorted multiset: base table ∪ extents
+    * − tombstones. A lost or duplicated row shows here even where the
+    * family's results cannot see it. */
+  private def liveIds(f: Family, table: String, root: String): Seq[Seq[Long]] = {
+    import spark.implicits._
+    def ids(df: DataFrame): Seq[Long] = df.select(col(f.key).cast("long")).as[Long].collect().toSeq
+    def read(dir: String): Seq[Long] =
+      if (exists(dir)) ids(spark.read.schema(s"${f.key} LONG").parquet(dir)) else Nil
+    val tombs = read(root + "/tombstones").toSet
+    f.sides(table, root).map { case (base, ext) =>
+      (ids(spark.table(base)) ++ read(ext)).filterNot(tombs).sorted
+    }
+  }
+
+  /** (live ids, results) — ids first: the flag families' `observe`
+    * admits its probe batch. */
+  private def snapshot(f: Family, table: String, root: String, n: Long): (Any, Any) =
+    (liveIds(f, table, root), f.observe(table, root, n))
+
+  /** Snapshots of a never-crashed twin: after a clean tiered
+    * compaction, and after one more admission on top of it. */
+  private val twins = scala.collection.mutable.Map.empty[String, ((Any, Any), (Any, Any))]
+  private def twinOf(f: Family): ((Any, Any), (Any, Any)) = twins.getOrElseUpdate(f.name, {
+    val table = s"lsmtab_${f.name.toLowerCase}_twin"
+    val root = f.setup(table)
+    f.tiered(table, root)
+    val before = snapshot(f, table, root, 7L)
+    f.admitMore(table, root)
+    val after = snapshot(f, table, root, 9L)
+    f.drop(table)
+    (before, after)
+  })
+
+  /** Once an interrupted swap is finished, live ids and results equal
+    * the never-crashed twin, no swap plan is left to replay, and a
+    * later admission composes. */
+  private def assertLikeTwin(f: Family, table: String, root: String): Unit = {
+    val (before, after) = twinOf(f)
+    assert(snapshot(f, table, root, 7L) == before, s"${f.name}: state differs from the twin")
+    assert(!exists(Lsm.stagingRoot(root)), "a swap plan was left behind")
+    f.admitMore(table, root)
+    assert(snapshot(f, table, root, 9L) == after, s"${f.name}: a later admission does not compose")
+  }
+
+  private def crashTiered(f: Family, table: String, root: String, label: String): Unit = {
+    armCrash(label)
+    try intercept[InjectedCrash](f.tiered(table, root))
+    finally disarm()
+  }
+
+  for (f <- families;
+       label <- Seq("survivors_moved", "extent_deleted:", "extent_moved:", "tombstones_cleaned"))
+    test(s"crash window ${f.name} at ${label.stripSuffix(":")}: recover() finishes, results == never-crashed twin, admit composes") {
+      val table = s"lsmtab_${f.name.toLowerCase}_${label.filter(_.isLetter)}"
+      val root = f.setup(table)
+      crashTiered(f, table, root, label)
+      assert(Lsm.recover(spark, Lsm.stagingRoot(root)), "recover must find and replay the plan")
+      assertLikeTwin(f, table, root)
+      f.drop(table)
+    }
+
+  for (f <- families)
+    test(s"${f.name}.compact after an interrupted tiered swap recovers it first (no stale plan replays later)") {
+      // without recovery inside compact, the full fold reads
+      // half-swapped extents (the recorded partitions already deleted,
+      // the consolidated one not yet renamed in) and loses them, and
+      // the stale plan left behind replays onto the compacted index at
+      // the next admission
+      val table = s"lsmtab_${f.name.toLowerCase}_compact"
+      val root = f.setup(table)
+      crashTiered(f, table, root, "extent_deleted:")
+      f.compact(table, root)
+      assertLikeTwin(f, table, root)
+      f.drop(table)
+    }
 }

@@ -372,4 +372,32 @@ class IvfIndexSpec extends SparkSpec {
       "ivf_mrg_b_centroids", "ivf_mrg_out", "ivf_mrg_out_centroids")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
+
+  test("rebirth guard: re-admitting a deleted vec_id throws (float and int8); replaying its own batch does not") {
+    // a deleted id re-admitted before a compaction would stay hidden
+    // by its own tombstone and vanish at compact — the other three
+    // families reject this; so does IVF
+    val emb = spark.read.parquet(s"${sf("embeddings")}/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val vec3 = emb.filter(col("vec_id") === 3)
+    def check(table: String, admit: (String, String, Long) => Unit): Unit = {
+      val grow = java.nio.file.Files.createTempDirectory(table).toString
+      admit(table, grow, 1L)
+      IvfIndex.delete(spark, grow, vec3.select(col("vec_id")), 2L)
+      // replay of batch 1: vec 3 is in the batch's own prior partition
+      admit(table, grow, 1L)
+      val e = intercept[IllegalArgumentException](admit(table, grow, 3L))
+      assert(e.getMessage.contains("tombstoned"), e.getMessage)
+    }
+    IvfIndex.write(emb.filter(col("vec_id") % 2 === 0), "ivf_reborn_idx", buckets = 4)
+    check("ivf_reborn_idx",
+      (t, g, b) => IvfIndex.admit(spark, t, g, vec3, b))
+    IvfIndex.writeInt8(emb.filter(col("vec_id") % 2 === 0), "ivf_reborn8_idx",
+      nlist = 8, iterations = 2, buckets = 4)
+    check("ivf_reborn8_idx",
+      (t, g, b) => IvfIndex.admitInt8(spark, t, g, vec3, b))
+    Seq("ivf_reborn_idx", "ivf_reborn_idx_centroids")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    IvfIndex.dropInt8(spark, "ivf_reborn8_idx")
+  }
 }

@@ -187,7 +187,7 @@ class PostingsIndexSpec extends SparkSpec {
     def partitions(dir: String): Seq[String] =
       fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSeq.sorted
-    val cons = s"batch_id=${PostingsIndex.ConsolidatedBatchId}"
+    val cons = s"batch_id=${graft.api.Lsm.ConsolidatedBatchId}"
     assert(partitions(PostingsIndex.postingsPath(root)) == Seq(cons))
     assert(partitions(PostingsIndex.docsPath(root)) == Seq(cons))
     assert(partitions(PostingsIndex.statsPath(root)) == Seq(cons))
