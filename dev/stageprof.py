@@ -3,6 +3,12 @@
 
 Usage: python3 dev/stageprof.py <eventlog-file-or-dir> [topN]
 
+Spark reads spark.eventLog.* from JVM system properties, and both `run`
+and `Test` fork a JVM that takes javaOptions, so any tool writes an
+event log with (the dir must exist):
+
+  sbt 'set Test/javaOptions ++= Seq("-Dspark.eventLog.enabled=true","-Dspark.eventLog.dir=/tmp/ev")' "Test/runMain graft.DevScaleIter"
+
 Handles the rolling (eventlog_v2) zstd layout via pyarrow. Prints the
 topN stages by wall time (with shuffle volume and max/median task-time
 skew), then the job timeline's driver-side gaps >3 s — the two views

@@ -1,30 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r17 engine default (scale-independent: planning cost, not
-      // data cost). Catalyst constraint propagation is O(plan²) on
-      // the deep lifecycle/staged plans this suite runs, and its
-      // inference is the documented source of two pathologies here
-      // (r16: join-constraint alias re-expansion OOM; r17: filter
-      // pushdown as a third re-expansion door — docs/SCALE.md).
-      // Iteration loops already ran with it off (measured, r5);
-      // extending engine-wide measured q_bm25_compact 9.9 -> 7.2 s /
-      // q_substring_fixpoint 4.0 -> 2.7 s warm same-box A/B, flat
-      // elsewhere. Every filter in this engine is explicit, so no
-      // query depends on inferred predicates; Verify runs under the
-      // same conf, so the oracle gate covers exactly this engine
-      // configuration.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     // warm up JVM/codegen/scheduler and parquet footers before timing:
     // the metric is query compute cost, not session startup/metadata IO
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
@@ -67,7 +45,8 @@ object Bench {
     // innocent query. The canary measures the box, so the pin can compare
     // box-normalized times and raw totals can be read alongside a
     // normalized twin. Three legs on purpose, matching the suite's
-    // own cost mix (leg ratios measured via DevCanaryProfile): a
+    // own cost mix (leg ratios measured via DevCanaryProfile on its
+    // local[32] session, which last exists at commit 3d04a35): a
     // codegen'd CPU leg (range sum), a shuffle+join leg, and a
     // scheduler-latency leg (10 tiny single-stage jobs) — most suite
     // queries are many small stages, so driver/scheduler latency is a

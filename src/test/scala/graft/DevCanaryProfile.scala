@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness (not a spec): times candidate bench-canary legs so the
   * canary's composition can be tuned to track the SUITE's slowdown
   * under background load, not just raw CPU slowdown. Run manually:
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   * with and without a synthetic load, compare leg ratios. */
 object DevCanaryProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

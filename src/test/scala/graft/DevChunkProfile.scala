@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only profiling harness backing the measured claim in
   * pipeline/Chunking.scala: rolling prefix-hash chunk fingerprints
   * (ChunkFpsExpr) vs the slice-and-fold HOF formulation, timed on the
@@ -13,15 +11,9 @@ import org.apache.spark.sql.SparkSession
 object DevChunkProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val (size, stride) =
       if (args.length >= 2) (args(0).toInt, args(1).toInt) else (64, 48)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val docs = Tables.t(spark, sfDir, "documents")
     def time(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {

@@ -53,19 +53,7 @@ object DevDedupGrow {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // GRAFT_EVENT_LOG=/dir: stage-level forensics via dev/stageprof.py
-    sys.env.get("GRAFT_EVENT_LOG").foreach { d =>
-      builder.config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", d)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JIT warm
 
     val batchRows = 20000L

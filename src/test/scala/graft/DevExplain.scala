@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dump: write `.explain("formatted")` of named queries
   * to files (the plans/r17 before/after artifact the optimization
   * rounds commit).
   *
   *   sbt "Test/runMain graft.DevExplain /root/repo/plans/r17 _after q_a q_b"
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4,
+  * read by GraftSession.engine).
   */
 object DevExplain {
   def main(args: Array[String]): Unit = {
@@ -16,13 +15,7 @@ object DevExplain {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       graft.api.Materialize.lastAuditPlan = None

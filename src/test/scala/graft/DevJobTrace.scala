@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only job tracer: run named queries once (warm) and print, per
   * query, the Spark job count, the sum of job wall-times, the
   * MAKESPAN (union of job intervals), and the overlap factor
@@ -10,19 +8,13 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "Test/runMain graft.DevJobTrace q_dedup_compact ..."
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4,
+  * read by GraftSession.engine).
   */
 object DevJobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
     val listener = new org.apache.spark.scheduler.SparkListener {

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only pin-flag adjudication runner (VERDICT r12 #2).
   *
-  * Reproduces the bench's exact conditions (local[32], shuffle.partitions=32,
-  * warm methodology, same 3-leg canary as Bench.scala) and times the flagged
+  * Reproduces the bench's exact conditions (GraftSession.engine; the
+  * committed canary was taken at SPARK_GRAFT_CPUS=32; warm methodology,
+  * same 3-leg canary as Bench.scala) and times the flagged
   * queries min-of-3 AFTER establishing the box is neutral: the canary median
   * must read <= 1.05x the committed neutral-box canary (1.273988935 from
   * e5cad92), else the run is declared non-neutral and the numbers are only
@@ -20,13 +19,7 @@ object DevPinAdjudicate {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val neutralCanary = sys.env.getOrElse("SPARK_GRAFT_NEUTRAL_CANARY",
       "1.273988935").toDouble
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val warmup = "/root/testdata/sf0.001"
     Seq("q3_shipping_priority", "q_topk_per_group", "q_wordcount",

@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only focused bench: time a subset of SparkEntry.queries under
   * the driver's bench conditions (local[N], shuffle.partitions=N).
   *
   *   sbt "Test/runMain graft.DevQueryBench q_pagerank q_connected_components"
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4,
+  * read by GraftSession.engine).
   */
 object DevQueryBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // match the committed Bench/Verify engine conf (r17) so focused
-      // A/B numbers are taken under the configuration the driver times
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq
     names.foreach { name =>

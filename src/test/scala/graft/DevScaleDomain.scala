@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only domain-reputation scale measurement (r14): the rollup +
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
   * Headline numbers land in docs/SCALE.md "domain-reputation". */
 object DevScaleDomain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val docs = spark.read
       .parquet("/root/testdata/sf0.1/documents.parquet")

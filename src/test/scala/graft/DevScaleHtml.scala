@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only crawl-front-end extraction scale measurement (r13): the
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
   * Headline numbers land in docs/SCALE.md "Crawl-front-end". */
 object DevScaleHtml {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val docs = spark.read
       .parquet("/root/testdata/sf0.1/documents.parquet")

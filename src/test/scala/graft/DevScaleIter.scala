@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only iteration scale-headroom measurement (VERDICT r7 #6):
@@ -22,19 +21,7 @@ import org.apache.spark.sql.functions._
   * Findings land in docs/SCALE.md (iteration headroom section). */
 object DevScaleIter {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // GRAFT_EVENT_LOG=/dir: write the Spark event log for stage-level
-    // forensics of the per-superstep trace (dev-only)
-    sys.env.get("GRAFT_EVENT_LOG").foreach { d =>
-      builder.config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", d)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JIT warm
 
     def timed[A](name: String)(f: => A): A = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale slope for the r17 link frame: extraction +
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
   * self-union, the DevScaleUrl shape), min-of-3 per size. */
 object DevScaleLinks {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     import graft.text.{Links, Url}
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"))

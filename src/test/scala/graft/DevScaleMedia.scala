@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only media-fingerprint scale-headroom measurement (r11): the
@@ -19,13 +18,7 @@ import org.apache.spark.sql.functions._
   * volume) land in docs/SCALE.md "Multimodal fingerprint dedup". */
 object DevScaleMedia {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JIT warm
 
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq

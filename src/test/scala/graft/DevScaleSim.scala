@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only ANN scale-headroom measurement (r10): kNN-graph build two
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
   * from Similarity.knnGraph's scaladoc. */
 object DevScaleSim {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JIT warm
 
     val n = args.headOption.map(_.toLong).getOrElse(100000L)

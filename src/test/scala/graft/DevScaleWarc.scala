@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only `.warc.gz` source heap-posture measurement (r15, VERDICT
@@ -33,12 +32,7 @@ object DevScaleWarc {
     val segMB = if (args.nonEmpty) args(0).toInt else 400
     // local[1]: ONE task walks the one segment — the per-task bound is
     // the thing under measurement, parallelism-across-files is not
-    val spark = SparkSession.builder()
-      .master("local[1]")
-      .config("spark.sql.shuffle.partitions", 1)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine(1)
 
     val dir = java.nio.file.Files.createTempDirectory("warcscale")
     try {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only warm-rerun stability probe (VERDICT r13 what's-wrong #3):
   * q_substring_scrub's bench runs read [6.5, 9.8, 16.5 s] —
   * monotonically RISING across warm repeats, a pattern no other
@@ -25,13 +23,7 @@ object DevScrubLoop {
     val doGc = args.contains("gc")
     val qname = args.find(_.startsWith("q_")).getOrElse("q_substring_scrub")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.engine()
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val rt = Runtime.getRuntime
     def mb(v: Long): Long = v / (1024 * 1024)

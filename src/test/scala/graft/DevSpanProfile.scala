@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions.tokens
 object DevSpanProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.engine()
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     def time(tag: String)(f: => Unit): Unit = {
       for (i <- 1 to 3) { val t0 = System.nanoTime(); f

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for Scrub.spanScrub: synthetic word-salad corpora at
@@ -7,11 +6,7 @@ import org.apache.spark.sql.functions._
   * wall-time slope (backs the SCALE.md linearity claim). */
 object DevSpanScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.engine()
     import spark.implicits._
     val vocab = (0 until 40).map(i => s"w$i")
     def corpus(n: Int) = spark.range(n.toLong).select(

@@ -42,7 +42,6 @@ class GraftFunctionsSpec extends SparkSpec {
     val s2 = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
