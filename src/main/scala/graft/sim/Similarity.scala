@@ -199,11 +199,18 @@ object Similarity {
     * join (SHUFFLE_HASH, the q_dedup_embedding posture — a
     * corpus-sized side must never broadcast), and the per-vector rank
     * is one WindowGroupLimit. Join volume ~ nprobe/nlist of the
-    * all-pairs square. At 100 TB, nlist scales with the corpus
-    * (cells ~ sqrt(n) keeps both the per-cell block and the centroid
-    * table bounded) so the cell key count stays well above the
-    * partition count; at fixture scale nlist=16 under-fills 32
-    * partitions, which is the fixture's problem, not the plan's.
+    * all-pairs square.
+    *
+    * The join costs its OUTPUT pairs, not its input bytes, so both
+    * sides are hash-partitioned on `cell` at the job's width
+    * ([[graft.api.Spread.byKey]]); left to AQE, the few-MB `cell`
+    * shuffle coalesced into ONE partition at any core count and all
+    * the exact-cosine scoring plus the partial top-k ran as one task.
+    * The pinned exchange gets no AQE skew split: at 100 TB nlist
+    * scales with the corpus (cells ~ sqrt(n) keeps both the per-cell
+    * block and the centroid table bounded), and that bounds the
+    * largest partition. A cell is the unit of work, so at fixture
+    * scale the nlist=16 cells spread unevenly over the partitions.
     * Recall contract matches ivfTopK: neighbors outside the nprobe
     * probed cells are missed (SimilaritySpec asserts recall vs brute
     * force on the fixture). */
@@ -217,7 +224,9 @@ object Similarity {
       .withColumn("cell", NearestCell.nearestCell(col("cv"), cells))
     val qb = corpus.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .withColumn("cell", explode(NearestCell.nearestCells(col("qv"), cells, nprobe)))
-    val cand = qb.join(cb.hint("SHUFFLE_HASH"), Seq("cell"))
+    val cand = graft.api.Spread.byKey(qb, col("cell"))
+      .join(graft.api.Spread.byKey(cb, col("cell")).hint("SHUFFLE_HASH"),
+        Seq("cell"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), simRounded(col("qv"), col("cv")).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))

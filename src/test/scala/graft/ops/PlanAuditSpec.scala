@@ -19,6 +19,42 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** After `collect`, both sides of `q`'s first ShuffledHashJoin are
+    * fed by a `hashpartitioning(<key>, 4), REPARTITION_BY_NUM` exchange
+    * with no coalescing AQEShuffleRead in between (4 = the test
+    * session's cores). */
+  private def assertPinnedOn(q: String, key: String): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val df = graft.SparkEntry.queries(q)(spark, dir)
+    df.collect()
+    def feed(p: SparkPlan, read: Option[AQEShuffleReadExec])
+        : (Option[AQEShuffleReadExec], ShuffleExchangeLike) = p match {
+      case s: ShuffleQueryStageExec => (read, s.shuffle)
+      case e: ShuffleExchangeLike => (read, e)
+      case r: AQEShuffleReadExec => feed(r.child, Some(r))
+      case u if u.children.size == 1 => feed(u.children.head, read)
+      case other => fail(s"no exchange under the join input:\n$other")
+    }
+    val joins = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: ShuffledHashJoinExec => j }
+    assert(joins.nonEmpty, df.queryExecution.executedPlan.toString)
+    val feeds = joins.head.children.map(feed(_, None))
+    assert(feeds.size == 2)
+    feeds.foreach { case (read, ex) =>
+      assert(ex.shuffleOrigin == REPARTITION_BY_NUM, ex.toString)
+      ex.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), 4) => assert(a.name == key, ex.toString)
+        case other => fail(s"expected hashpartitioning($key, 4), got $other")
+      }
+      assert(read.forall(!_.hasCoalescedPartition), s"coalesced: $read")
+    }
+  }
+
   test("q1: shipdate filter pushed to parquet scan; columns pruned") {
     val p = executedPlan("q1_pricing_summary")
     assert(p.contains("PushedFilters: [LessThanOrEqual(l_shipdate"), p)
@@ -409,6 +445,10 @@ class PlanAuditSpec extends SparkSpec {
     val p = executedPlan("q_knn_graph")
     assert(p.contains("ShuffledHashJoin"), p)
     assert(!p.contains("BroadcastExchange"), "corpus must not broadcast:\n" + p)
+  }
+
+  test("knn graph: both candidate-join sides pinned to 4 hash partitions on cell, never coalesced") {
+    assertPinnedOn("q_knn_graph", "cell")
   }
 
   test("filtered ANN: label predicate reaches EVERY index part's scan, pre-join") {
